@@ -14,7 +14,6 @@ histogram aggregations; the join is over bucket cardinality (tiny).
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.window import Window
 
 EPS = 1e-6
 
@@ -26,8 +25,7 @@ def categorical_histogram(df: DataFrame, col: str,
          .groupBy(F.coalesce(F.col(col).cast("string"),
                              F.lit(null_bucket)).alias("bucket"))
          .agg(F.count(F.lit(1)).alias("n")))
-    return h.withColumn("p", F.col("n") / F.sum("n").over(
-        Window.partitionBy()))
+    return _with_share(h)
 
 
 def length_histogram(df: DataFrame, col: str,
@@ -38,8 +36,18 @@ def length_histogram(df: DataFrame, col: str,
     h = (df
          .groupBy(F.coalesce(b, F.lit("__null__")).alias("bucket"))
          .agg(F.count(F.lit(1)).alias("n")))
-    return h.withColumn("p", F.col("n") / F.sum("n").over(
-        Window.partitionBy()))
+    return _with_share(h)
+
+
+def _with_share(h: DataFrame) -> DataFrame:
+    """Add ``p`` = n / total. The total is a one-row aggregate
+    cross-joined back (a broadcast), not a window over an empty
+    partition spec, which would move every bucket to one partition and
+    log a WindowExec warning per call."""
+    total = h.agg(F.sum("n").alias("__total"))
+    return (h.crossJoin(total)
+            .withColumn("p", F.col("n") / F.col("__total"))
+            .drop("__total"))
 
 
 def _safe(p: Column) -> Column:

@@ -323,6 +323,17 @@ class ValidationEngine:
                    pre_normalized: bool = False,
                    extra_cols: Sequence[str] = (),
                    barrier: bool = True) -> DataFrame:
+        return self._violations(df, pre_normalized, extra_cols, barrier)
+
+    def _violations(self, df: DataFrame, pre_normalized: bool,
+                    extra_cols: Sequence[str], barrier: bool,
+                    observe_rows=None) -> DataFrame:
+        """``violations()`` with an optional per-row hook:
+        ``observe_rows(rows, failed)`` may wrap (e.g. ``observe``) the
+        phase-2 frame that holds one row per phase-1 capture, where
+        ``failed`` is the exact per-row failure flag. With the barrier
+        (and without ``dedup``) that frame is in the output's stage.
+        Without the hook the plan is the one ``violations()`` builds."""
         src = df if pre_normalized else self.normalize(df)
         carry = list(self.key_cols) + list(extra_cols)
         # two-phase: cheap boolean scan over everything, expensive
@@ -347,9 +358,12 @@ class ValidationEngine:
                 failing = failing.repartition(
                     df.sparkSession.sparkContext.defaultParallelism)
 
-        def project(chunk_rules, emit_presence):
+        def project(rows, chunk_rules, emit_presence, observe=None):
             viol = self._violations_array(
-                failing, rules=chunk_rules, emit_presence=emit_presence)
+                rows, rules=chunk_rules, emit_presence=emit_presence)
+            per_row = rows.select(*carry, viol.alias("_v"))
+            if observe is not None:
+                per_row = observe(per_row, F.size("_v") > 0)
             # NO size(_v)>0 pre-filter here: explode() already emits
             # zero rows for an empty array, and a filter on _v gets
             # pushed by Catalyst below the barrier exchange — which
@@ -359,8 +373,7 @@ class ValidationEngine:
             # That duplication is what overflowed Janino's 64 KB method
             # limit on the 8-rule flagship (17k-line processNext, 3x
             # failed compiles + interpreted fallback per fresh JVM).
-            return (failing
-                    .select(*carry, viol.alias("_v"))
+            return (per_row
                     .select(*carry, F.explode("_v").alias("v"))
                     .select(*carry, "v.*"))
 
@@ -419,9 +432,17 @@ class ValidationEngine:
             from pyspark import StorageLevel
             failing = failing.persist(StorageLevel.MEMORY_AND_DISK)
             persisted = failing
-        out = project(chunks[0], emit_presence=True)
+        if observe_rows is not None and len(chunks) > 1:
+            # no single branch sees all of a row's violations, so the
+            # first branch, which reads every captured row, carries the
+            # exact pass predicate (compact, unlike the violation arrays)
+            out = project(observe_rows(failing, ~self._pass_all(failing)),
+                          chunks[0], emit_presence=True)
+        else:
+            out = project(failing, chunks[0], emit_presence=True,
+                          observe=observe_rows)
         for chunk_rules in chunks[1:]:
-            out = out.unionByName(project(chunk_rules,
+            out = out.unionByName(project(failing, chunk_rules,
                                           emit_presence=False))
         if self.dedup:
             # ValidationErrors::merge dedup semantics (error.rs:222-231)

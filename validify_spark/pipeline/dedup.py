@@ -113,7 +113,7 @@ def jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     rows, 154M raw candidate-pair rows):
 
     - **Set-digest collapsing** (r6b): docs with IDENTICAL shingle sets
-      are collapsed to one representative (md5 of the sorted distinct
+      are collapsed to one representative (SHA-256 of the sorted distinct
       shingle array) BEFORE the quadratic pair machinery, and results
       are expanded back afterwards. Exact by construction: two docs
       with equal sets have jaccard 1.0 with each other and identical
@@ -184,7 +184,7 @@ def jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
         word_shingles_expr(F.col("__text"), n)))
     groups = (src.select(F.col("__id"), ts.alias("__ts"))
               .filter(F.size("__ts") > 0)
-              .groupBy(F.md5(F.to_json("__ts")).alias("__dg"))
+              .groupBy(F.sha2(F.to_json("__ts"), 256).alias("__dg"))
               .agg(F.min("__id").alias("__rep"),
                    F.collect_list("__id").alias("__members"),
                    F.first("__ts").alias("__ts"))

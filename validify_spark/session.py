@@ -65,6 +65,13 @@ def get_spark(app_name: str = "validify-spark",
         # remains the fallback for oversized build sides.
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # PySpark's DataFrame debugging records the Python call site of
+        # every API call (functions.*, Column ops) in the JVM: about four
+        # extra py4j round trips per call. Building one audit commit
+        # batch made 4,300 py4j calls with it on and 1,500 with it off;
+        # the cost is per plan, so it dominates short queries. Errors
+        # still carry the JVM stack and the failing expression.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 << 20))
