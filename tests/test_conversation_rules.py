@@ -180,7 +180,7 @@ def test_mixed_tiers_union(spark):
 
 def test_null_predicate_is_failure(spark):
     # NULL text makes the budget aggregate NULL -> unknown -> violation,
-    # matching compile_schema_rule's convention
+    # matching the engine's schema-rule convention (compiler.lower)
     df = spark.createDataFrame([("n", 0, "user", None, 100)], SCHEMA)
     got = {(r["conv_id"], r["code"])
            for r in conversation_rules(df, [RULES[1]]).collect()}

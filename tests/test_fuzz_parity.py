@@ -172,7 +172,7 @@ def mod_sql(expr: str, kind: str) -> str:
 def fail_sql(rule: Rule, m: str, other_m: str = None) -> str:
     """DuckDB predicate: True ⇔ ``rule`` VIOLATES on the modified
     column expression ``m``. Option semantics included (NULL passes
-    everything but required, compile_rule fields.rs:355-396)."""
+    everything but required, compiler.lower fields.rs:355-396)."""
     p = rule.params
     k = rule.kind
     if k == "required":
@@ -216,7 +216,7 @@ def fail_sql(rule: Rule, m: str, other_m: str = None) -> str:
         if p.get("target_column"):
             # string target parsed per row: parse failure OR failed
             # comparison both violate with the op's code, so one arm
-            # covers both flavors (compiler._compile_time_string_target)
+            # covers both flavors (compiler.Lowered)
             parsed = (f"try_strptime(r_{p['target_column']}, "
                       f"'{TSTR_FMT_DUCK}')")
             if op == "in_period":
@@ -561,7 +561,7 @@ def build_oracle_sql(table, spec, ruleset, chains):
             g = r.params.get("_gate")
             gate_sql = (f"COALESCE(({g}), FALSE) AND " if g else "")
             # NULL predicate result counts as failure (unknown ⇒ not
-            # proven ok, compile_schema_rule)
+            # proven ok, compiler.lower)
             arms.append(
                 f"SELECT {key} AS k, '/' AS location, "
                 f"'{r.effective_code}' AS code FROM src "
@@ -665,6 +665,16 @@ def _run_trial(spark, con, sources, seed):
         f"{[x for x in exp if x not in got][:5]}\nruleset: "
         f"{[(r.kind, r.column, r.stage, r.params.get('_gate')) for r in ruleset.rules]}"
         f"\nchains: {chains}\nSQL:\n{sql}")
+
+    # 3. the two phases agree: the rows with_valid_flag marks invalid
+    # are exactly the rows with violations (keys are primary keys)
+    invalid = sorted(
+        int(r[0]) for r in eng.with_valid_flag(sources[table], "__ok")
+        .filter(~F.col("__ok")).select(key).collect())
+    assert invalid == sorted({k for k, _, _ in got}), (
+        f"seed={seed} table={table}: with_valid_flag marks "
+        f"{len(invalid)} rows invalid, violations name "
+        f"{len({k for k, _, _ in got})}")
 
 
 @pytest.mark.parametrize("block", range(8))

@@ -192,37 +192,6 @@ def test_now_ops_reject_targets():
                                   format="%Y-%m-%d %H:%M:%S")])
 
 
-def test_bench_floor_applies_to_new_time(tmpdir):
-    import json
-    import os
-    import sys
-    sys.path.insert(0, os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-    import bench
-    old = bench.BASELINE_PATH, bench.SF_DIR
-    try:
-        bench.BASELINE_PATH = f"{tmpdir}/base.json"
-        bench.SF_DIR = "/x/sf0.1"
-        with open(bench.BASELINE_PATH, "w") as f:
-            json.dump({"sf": 0.1, "queries": {"tiny": 0.15,
-                                              "big": 2.0}}, f)
-        flags = bench._flag_regressions({"tiny": 7.5, "big": 2.1,
-                                         "brand_new": 9.9})
-        assert "tiny" in flags          # sub-floor baseline, 50x slower
-        assert "big" not in flags       # within budget
-        assert bench._baseline_missing({"brand_new": 9.9,
-                                        "big": 2.1}) == ["brand_new"]
-        # sub-floor jitter around the floor must NOT flag
-        with open(bench.BASELINE_PATH, "w") as f:
-            json.dump({"sf": 0.1, "queries": {"jit": 0.19,
-                                              "zero": 0.0}}, f)
-        flags2 = bench._flag_regressions({"jit": 0.24, "zero": 0.5})
-        assert "jit" not in flags2
-        assert flags2["zero"]["ratio"] is None  # no div-by-zero
-    finally:
-        bench.BASELINE_PATH, bench.SF_DIR = old
-
-
 def test_duplicate_clusters_components(spark):
     """Hash-min label propagation finds each component's min id,
     including multi-hop chains."""

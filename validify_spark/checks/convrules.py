@@ -9,7 +9,7 @@ stable (turn_idx, ts) order — and a rule is any predicate over that
 sequence ("must contain an assistant turn", "total text under the
 token budget", "tool turns only after an assistant turn", ...).
 
-Like the engine's schema rule (compiler.compile_schema_rule), a rule
+Like the engine's schema rule (compiler.lower), a rule
 that evaluates to NULL counts as FAILED (unknown is not proven ok),
 and every rule is evaluated for every conversation — no
 short-circuiting, all violations merged.

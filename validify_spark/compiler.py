@@ -2,19 +2,23 @@
 
 Analog of the reference's codegen (validify_derive/src/tokens.rs:80-264):
 where the proc macro emits one inlined ``if !check {...}`` block per rule,
-we emit one Column expression per rule — an ``array<violation-struct>``
-that is empty when the rule passes — and fuse ALL rules into a single
-projection so the table is scanned once (SURVEY.md §4.2 "rule fusion").
-Catalyst then gives CSE + whole-stage codegen for free.
+we lower each rule once (``lower``) to the parts both evaluation phases
+need — an exact pass predicate, a cheap phase-1 screen and an
+``array<violation-struct>`` that is empty when the rule passes. The
+engine fuses every rule's parts into single projections so the table is
+scanned once (SURVEY.md §4.2 "rule fusion"); Catalyst then gives CSE +
+whole-stage codegen for free. Because both phases come from one
+lowering, a row passes the phase-1 scan exactly when phase 2 gives it
+no violation (up to the email/url screen, which only over-captures).
 
-Option semantics (fields.rs:355-396): every rule except ``required`` passes
-on NULL — compiled as ``c.isNull() | pred``.
+Option semantics (fields.rs:355-396): every rule except ``required``
+passes on NULL, and a NULL verdict fails (``_verdict``).
 """
 
 from __future__ import annotations
 
 import datetime as _dt
-from dataclasses import replace
+from functools import cached_property
 from typing import Optional
 
 from pyspark.sql import Column, functions as F, types as T
@@ -100,7 +104,7 @@ def ok_and_params(rule: Rule, c: Column, dtype: Optional[T.DataType],
     """Return (ok_predicate, params_dict) for a rule applied to Column ``c``.
 
     ``ok`` is True ⇔ the value PASSES. NULL handling is applied by the
-    caller (compile_rule), not here. ``schema`` (when available) lets
+    lowering (``Lowered``), not here. ``schema`` (when available) lets
     time rules detect string-typed target_columns that must parse at
     runtime.
     """
@@ -251,8 +255,8 @@ def _time_ok(rule: Rule, c: Column, run_ts: _dt.datetime,
     arithmetic is folded driver-side into literals (constant folding the
     reference does at parse time, parser.rs:455-483). String-typed
     target_columns parse per row; an unparseable target is never proven
-    ok (the violation-side parse error lives in
-    _compile_time_string_target). Date-typed columns route to the
+    ok (the parse-error violation flavor is built by
+    ``Lowered``). Date-typed columns route to the
     whole-day *_date/*_today variants."""
     if isinstance(dtype, T.DateType):
         return _time_ok_date(rule, c, run_ts, schema)
@@ -391,318 +395,15 @@ def _time_ok_date(rule: Rule, c: Column, run_ts: _dt.datetime,
     raise ValueError(f"unknown time op {op}")
 
 
-def _compile_time_string_target(rule: Rule, run_ts: _dt.datetime,
-                                schema=None) -> Column:
-    """Violation array for a time rule whose target_column is a STRING
-    parsed at runtime. Two failure flavors, mirroring the reference
-    (tokens.rs:738-747 quoted_parse_error + :900-914
-    quote_time_with_target):
-
-    - target unparseable (or NULL) under ``format`` ⇒ violation with
-      params {actual: <validated value>, format: <format>} — same code
-      as the op;
-    - target parses but the comparison fails ⇒ the normal violation
-      ({actual, target} / {actual, from, to}).
-
-    NULL validated value passes (Option semantics) — the reference
-    skips the whole check, parse included, for None fields. A
-    date-typed rule column truncates the parsed target to a date and
-    uses whole-day in_period arithmetic (the *_date variants)."""
-    p = rule.params
-    tc, fmt = p["target_column"], p.get("format")
-    c = F.col(rule.column)
-    parsed = _parse_target_col(tc, fmt)
-    is_date = (schema is not None and isinstance(
-        resolve_type(schema, rule.column), T.DateType))
-    if is_date:
-        parsed = F.to_date(parsed)
-    op = p["op"]
-    inclusive = bool(p.get("inclusive", False))
-    dur = _dt.timedelta(seconds=p.get("interval_seconds", 0))
-    field = rule.display_name or rule.column.split(".")[-1]
-
-    if op == "before":
-        cmp_ok = (c <= parsed) if inclusive else (c < parsed)
-        cmp_prm = {"actual": c, "target": parsed}
-    elif op == "after":
-        cmp_ok = (c >= parsed) if inclusive else (c > parsed)
-        cmp_prm = {"actual": c, "target": parsed}
-    elif op == "in_period":
-        if is_date:
-            dur_days = int(dur.total_seconds() / 86400)
-            shifted = F.date_add(parsed, dur_days)
-            lo, hi = ((parsed, shifted) if dur_days >= 0
-                      else (shifted, parsed))
-        else:
-            shifted = parsed + F.make_dt_interval(
-                secs=F.lit(float(dur.total_seconds())))
-            lo, hi = ((parsed, shifted) if dur >= _dt.timedelta(0)
-                      else (shifted, parsed))
-        cmp_ok = c.between(lo, hi)
-        cmp_prm = {"actual": c, "from": lo, "to": hi}
-    else:
-        raise ValueError(
-            f"time op {op} does not take a target_column")
-
-    parse_viol = make_violation(
-        rule.rule_id, field, rule.location, rule.effective_code,
-        rule.message, {"actual": c, "format": F.lit(fmt)})
-    cmp_viol = make_violation(
-        rule.rule_id, field, rule.location, rule.effective_code,
-        rule.message, cmp_prm)
-    return (F.when(c.isNull(), empty_violations())
-            .when(parsed.isNull(),
-                  F.array(parse_viol).cast(VIOLATION_ARRAY_DDL))
-            .when(cmp_ok, empty_violations())
-            .otherwise(F.array(cmp_viol).cast(VIOLATION_ARRAY_DDL)))
-
-
 # ---------------------------------------------------------------------------
-# rule → array<violation> Column
+# lowering: rule → pass predicate, phase-1 screen, violation array
 # ---------------------------------------------------------------------------
-
-
-def _gate_expr(rule: Rule) -> Optional[Column]:
-    """Optional row-level applicability gate (enum-variant analog,
-    derive_tests/tests/enum.rs: per-variant fields validate only when
-    the row IS that variant). NULL/false gate ⇒ rule doesn't apply."""
-    gate = rule.params.get("_gate")
-    if gate is None:
-        return None
-    return F.expr(gate) if isinstance(gate, str) else gate
-
-
-def pass_expr(rule: Rule, schema: T.StructType,
-              run_ts: _dt.datetime, df=None,
-              prefilter: bool = False) -> Column:
-    """Compact boolean pass-predicate for a rule: True ⇔ the row has no
-    violation. NULL results mean "not proven ok" — callers must coalesce
-    to False (a NULL predicate outcome is a violation, matching
-    compile_rule).
-
-    This is the cheap phase-1 expression of the two-phase evaluation:
-    the engine filters rows on the conjunction of pass_exprs (small
-    expression → whole-stage codegen) and builds the expensive
-    violation structs only for the failing minority.
-
-    ``prefilter=True`` (r6) returns a SOUND UNDER-approximation of pass
-    for the two-tier validator kinds whose full verdict needs the Arrow
-    UDF tier: only the pure-codegen fast path may answer True (fast
-    True ⇒ valid by construction), so a slow-tier-valid row is merely
-    over-captured into phase 2, where the exact expression evaluates it
-    and emits no violation. The engine's violations() prefilter is the
-    ONLY caller — it moves the JVM↔Python boundary off the full-table
-    scan entirely (guide §4): the UDF then runs over the post-barrier
-    failing minority instead of every row. Exact-verdict consumers
-    (with_valid_flag, partition_report, coverage_report) keep the
-    default. Applied to email/url only: their fast paths decide the
-    overwhelming majority by design; `phone` has no sufficient pure-SQL
-    validity condition (over-capturing every row would shuffle the
-    whole table into phase 2), and an `ip any` rule over v6-heavy data
-    would pay the same — both stay exact in phase 1.
-    """
-    g = _gate_expr(rule)
-    if g is not None:
-        ungated = replace(rule, params={
-            k: v for k, v in rule.params.items() if k != "_gate"})
-        return F.when(g, pass_expr(ungated, schema, run_ts, df,
-                                   prefilter)) \
-                .otherwise(F.lit(True))
-    if rule.kind == "schema":
-        pred = rule.params["predicate"]
-        return F.expr(pred) if isinstance(pred, str) else pred(df)
-    if rule.kind == "iter":
-        return F.size(_compile_iter(rule, schema, run_ts)) == 0
-    if rule.kind == "map_values":
-        return F.size(_compile_map_values(rule, schema, run_ts)) == 0
-    c = F.col(rule.column)
-    dtype = resolve_type(schema, rule.column)
-    if prefilter and rule.kind in ("email", "url"):
-        ok = _fast_path_ok(rule, c)
-    else:
-        ok, _ = ok_and_params(rule, c, dtype, run_ts, schema)
-    if rule.kind == "required":
-        return ok
-    return c.isNull() | ok
-
-
-def _fast_path_ok(rule: Rule, c: Column) -> Column:
-    """Codegen-only sufficient-validity condition for the two-tier
-    kinds: True ⇒ the full two-tier verdict is also True. Rows it
-    cannot prove valid fall through to phase 2's exact expression."""
-    if rule.kind == "email":
-        return V.email_ok_fast(c)
-    return V.url_ok_fast(c)
-
-
-def compile_rule(rule: Rule, schema: T.StructType,
-                 run_ts: _dt.datetime) -> Column:
-    """Compile one rule into an ``array<violation-struct>`` Column
-    (empty array ⇔ pass)."""
-    if rule.kind == "schema":
-        raise ValueError("schema rules are compiled by the engine")
-
-    g = _gate_expr(rule)
-    if g is not None:
-        ungated = replace(rule, params={
-            k: v for k, v in rule.params.items() if k != "_gate"})
-        return F.when(g, compile_rule(ungated, schema, run_ts)) \
-                .otherwise(empty_violations())
-
-    if rule.kind == "iter":
-        return _compile_iter(rule, schema, run_ts)
-    if rule.kind == "map_values":
-        return _compile_map_values(rule, schema, run_ts)
-    if _time_string_target(rule, schema):
-        # string targets parse at runtime; parse failure emits its own
-        # violation flavor (actual + format params)
-        return _compile_time_string_target(rule, run_ts, schema)
-
-    c = F.col(rule.column)
-    dtype = resolve_type(schema, rule.column)
-    ok, prm = ok_and_params(rule, c, dtype, run_ts, schema)
-
-    viol = make_violation(
-        rule.rule_id, rule.display_name or rule.column.split(".")[-1],
-        rule.location, rule.effective_code, rule.message, prm)
-    one = F.array(viol).cast(VIOLATION_ARRAY_DDL)
-
-    if rule.kind == "required":
-        # the only validator that fires on NULL (required.rs:2-5)
-        return F.when(ok, empty_violations()).otherwise(one)
-    # NULL passes every other rule (fields.rs:355-396)
-    return F.when(c.isNull() | ok, empty_violations()).otherwise(one)
-
-
-def _compile_iter(rule: Rule, schema: T.StructType,
-                  run_ts: _dt.datetime) -> Column:
-    """Per-element validation on an array column with index-suffixed
-    locations (tokens.rs:167-235; golden '/test/1' iter.rs:26).
-
-    Implemented as a higher-order ``transform`` with the 2-arg (element,
-    index) lambda — stays in codegen, no explode/shuffle.
-    """
-    inner: Rule = rule.params["inner"]
-    arr = F.col(rule.column)
-    atype = resolve_type(schema, rule.column)
-    etype = atype.elementType if isinstance(atype, T.ArrayType) else None
-    sub = inner.column  # optional subfield of struct elements
-
-    base_loc = rule.location
-    field_name = (rule.display_name or rule.column.split(".")[-1])
-
-    # Spark bans Python UDF calls inside higher-order-function lambdas
-    # (UNSUPPORTED_FEATURE.LAMBDA_FUNCTION_WITH_PYTHON_UDF), so for
-    # UDF-backed kinds we precompute one array<boolean> ok-vector with a
-    # single top-level Arrow UDF and zip it against the array — the
-    # lambdas below then stay pure Catalyst.
-    udf_kind = None
-    if inner.kind in ("email", "url", "phone"):
-        udf_kind = inner.kind
-    elif inner.kind == "ip":
-        fmt = inner.params.get("format")
-        udf_kind = {"v4": "ipv4", "v6": "ipv6"}.get(fmt, "ip_any")
-    if udf_kind is not None:
-        values = F.transform(arr, lambda x: x[sub] if sub else x)
-        ok_arr = U.iter_ok(udf_kind)(values)
-        zipped = F.zip_with(
-            arr, ok_arr,
-            lambda x, ok: F.struct(x.alias("v"), ok.alias("ok")))
-
-        def per_element_udf(p: Column, i: Column) -> Column:
-            elem = p["v"][sub] if sub else p["v"]
-            loc = F.concat(F.lit(base_loc + "/"), i.cast("string"),
-                           F.lit("/" + sub) if sub else F.lit(""))
-            viol = make_violation(rule.rule_id, field_name, loc,
-                                  inner.effective_code,
-                                  inner.message or rule.message,
-                                  {"actual": elem})
-            passes = elem.isNull() | p["ok"]
-            return F.when(passes,
-                          F.lit(None).cast(VIOLATION_STRUCT_DDL)) \
-                    .otherwise(viol)
-
-        viols = F.filter(F.transform(zipped, per_element_udf),
-                         lambda v: v.isNotNull())
-        return F.when(arr.isNull(), empty_violations()).otherwise(viols)
-
-    def per_element(x: Column, i: Column) -> Column:
-        elem = x[sub] if sub else x
-        edt = (resolve_type(etype, sub)
-               if (sub and isinstance(etype, T.StructType)) else etype)
-        # top-level ``schema`` threaded so a nested time rule with a
-        # string-typed (top-level) target_column gets the same
-        # runtime-parse semantics as at top level. One documented
-        # difference: the dedicated parse-error violation flavor
-        # (_compile_time_string_target) is top-level only — nested
-        # parse failures emit the rule's normal code (unparseable
-        # target is still never proven ok).
-        ok, prm = ok_and_params(inner, elem, edt, run_ts, schema)
-        # inner display_name renames the location leaf, like
-        # ValidationError::new_field_named (error_location.rs:186-190
-        # golden '/second/invalid_grandchildren/2/obfuscated')
-        subloc = inner.display_name or sub
-        loc = F.concat(F.lit(base_loc + "/"), i.cast("string"),
-                       F.lit("/" + subloc) if subloc else F.lit(""))
-        viol = make_violation(rule.rule_id, field_name, loc,
-                              inner.effective_code, inner.message
-                              or rule.message, prm)
-        passes = elem.isNull() | ok
-        if inner.kind == "required":
-            passes = ok
-        return F.when(passes, F.lit(None).cast(VIOLATION_STRUCT_DDL)) \
-                .otherwise(viol)
-
-    viols = F.filter(F.transform(arr, per_element),
-                     lambda v: v.isNotNull())
-    # NULL array passes (option-of-array, iter.rs option cases)
-    return F.when(arr.isNull(), empty_violations()).otherwise(viols)
-
-
-def _compile_map_values(rule: Rule, schema: T.StructType,
-                        run_ts: _dt.datetime) -> Column:
-    """Per-value validation on a map column; locations carry the map KEY
-    (error.rs:117-158 — golden '/name/3/stuff',
-    derive_tests/tests/error_location.rs). Inner rule may target a
-    subfield of struct values."""
-    inner: Rule = rule.params["inner"]
-    col = F.col(rule.column)
-    mtype = resolve_type(schema, rule.column)
-    vtype = mtype.valueType if isinstance(mtype, T.MapType) else None
-    sub = inner.column
-
-    base_loc = rule.location
-    field_name = (rule.display_name or rule.column.split(".")[-1])
-
-    def per_entry(e: Column) -> Column:
-        elem = e["value"][sub] if sub else e["value"]
-        edt = (resolve_type(vtype, sub)
-               if (sub and isinstance(vtype, T.StructType)) else vtype)
-        # schema threaded for nested time string-target parse parity
-        # (see _compile_iter.per_element)
-        ok, prm = ok_and_params(inner, elem, edt, run_ts, schema)
-        subloc = inner.display_name or sub
-        loc = F.concat(F.lit(base_loc + "/"), e["key"].cast("string"),
-                       F.lit("/" + subloc) if subloc else F.lit(""))
-        viol = make_violation(rule.rule_id, field_name, loc,
-                              inner.effective_code,
-                              inner.message or rule.message, prm)
-        passes = elem.isNull() | ok
-        if inner.kind == "required":
-            passes = ok
-        return F.when(passes, F.lit(None).cast(VIOLATION_STRUCT_DDL)) \
-                .otherwise(viol)
-
-    viols = F.filter(F.transform(F.map_entries(col), per_entry),
-                     lambda v: v.isNotNull())
-    return F.when(col.isNull(), empty_violations()).otherwise(viols)
 
 
 def rule_input_columns(rule: Rule) -> list:
-    """Dotted column paths a rule reads — used by the engine's payload
-    column-existence pre-check (validate_from semantics: a rule naming
-    an absent column reports `required` instead of failing analysis,
-    validify_derive/src/payload.rs:123-135)."""
+    """Dotted column paths a rule reads — a rule naming an absent column
+    reports `required` instead of failing analysis (validate_from
+    semantics, validify_derive/src/payload.rs:123-135)."""
     cols = []
     if rule.kind != "schema" and rule.column:
         cols.append(rule.column)
@@ -713,31 +414,215 @@ def rule_input_columns(rule: Rule) -> list:
     return cols
 
 
-def compile_missing_column(rule: Rule, col: str) -> Column:
-    """Constant violation for a rule whose input column is absent from
-    the DataFrame schema: code `required` at the missing field's
-    location, emitted for every row (derive_tests/tests/payload.rs:14-22
-    — missing payload fields report `required`)."""
-    viol = make_violation(
-        rule.rule_id, col.split(".")[-1], "/" + col.replace(".", "/"),
-        "required", rule.message, {})
+def _verdict(kind: str, c: Column, ok: Column) -> Column:
+    """Pass verdict of value ``c`` under predicate ``ok``: NULL passes
+    every kind but ``required`` (fields.rs:355-396, required.rs:2-5).
+    A NULL verdict is a failure (unknown is not proven ok): CASE WHEN
+    takes it as false, and ``_proven`` makes it false."""
+    return ok if kind == "required" else c.isNull() | ok
+
+
+def _proven(verdict: Column) -> Column:
+    return F.coalesce(verdict, F.lit(False))
+
+
+def _true() -> Column:
+    return F.lit(True)
+
+
+def _one(viol: Column) -> Column:
     return F.array(viol).cast(VIOLATION_ARRAY_DDL)
 
 
-def compile_schema_rule(rule: Rule, df) -> Column:
-    """Whole-row predicate → 0/1-element violation array; location '/'
-    and no field, like ValidationError::Schema (error.rs:62-68)."""
-    pred = rule.params["predicate"]
-    ok = F.expr(pred) if isinstance(pred, str) else pred(df)
-    viol = make_violation(rule.rule_id, None, "/", rule.effective_code,
-                          rule.message, {})
-    one = F.array(viol).cast(VIOLATION_ARRAY_DDL)
-    # a NULL predicate result counts as failure (unknown ⇒ not proven ok)
-    out = F.when(ok, empty_violations()).otherwise(one)
-    # honor the variant gate in phase 2 exactly like pass_expr does in
-    # phase 1: a row of another variant that reached phase 2 by failing
-    # a DIFFERENT rule must not collect this variant's schema violation
-    g = _gate_expr(rule)
-    if g is not None:
-        out = F.when(g, out).otherwise(empty_violations())
-    return out
+def lower(rule: Rule, schema: T.StructType, run_ts: _dt.datetime,
+          df=None) -> "Lowered":
+    """Lower ``rule`` against a frame of ``schema``; ``df`` is the frame
+    a schema rule's callable predicate binds to."""
+    return Lowered(rule, schema, run_ts, df)
+
+
+class Lowered:
+    """One rule's row semantics for both evaluation phases. Each part is
+    built on first use, from one ``ok_and_params`` call:
+
+    - ``passes``: True ⇔ the row has no violation of the rule; never
+      NULL.
+    - ``screen``: the phase-1 filter. For email/url it is the pure
+      codegen fast path, a sound under-approximation of ``passes``
+      (fast True ⇒ valid), so the Arrow UDF tier leaves the full-table
+      scan and runs only on the captured minority. `phone` and `ip`
+      have no such fast path that decides most rows, so for them and
+      every other kind it is ``passes``.
+    - ``violations``: the ``array<violation-struct>`` (usually 0/1
+      elements; iter/map_values may emit several), empty ⇔ ``passes``.
+
+    Shared by all three: a variant gate (``params["_gate"]``, the
+    enum-variant analog of derive_tests/tests/enum.rs) that is NULL or
+    false makes the rule not apply; an input column absent from the
+    schema fails every row with code `required` at the missing field
+    (derive_tests/tests/payload.rs:14-22); schema rules are whole-row
+    predicates reported at location '/' with no field, like
+    ValidationError::Schema (error.rs:62-68).
+    """
+
+    def __init__(self, rule: Rule, schema: T.StructType,
+                 run_ts: _dt.datetime, df=None):
+        self.rule, self.schema, self.run_ts, self.df = (
+            rule, schema, run_ts, df)
+        self.missing = [c for c in rule_input_columns(rule)
+                        if resolve_type(schema, c) is None]
+
+    def _gated(self, part: Column, otherwise) -> Column:
+        """``part`` where the gate holds, else ``otherwise()`` — called
+        only for a gated rule, since every Column costs py4j calls."""
+        gate = self.rule.params.get("_gate")
+        if gate is None:
+            return part
+        g = F.expr(gate) if isinstance(gate, str) else gate
+        return F.when(g, part).otherwise(otherwise())
+
+    @cached_property
+    def passes(self) -> Column:
+        return _proven(self._gated(self._ok, _true))
+
+    @cached_property
+    def screen(self) -> Column:
+        r = self.rule
+        if r.kind not in ("email", "url") or self.missing:
+            return self.passes
+        c = F.col(r.column)
+        fast = V.email_ok_fast(c) if r.kind == "email" else V.url_ok_fast(c)
+        return _proven(self._gated(_verdict(r.kind, c, fast), _true))
+
+    @cached_property
+    def violations(self) -> Column:
+        return self._gated(self._violations(), empty_violations)
+
+    # -- ungated parts ------------------------------------------------------
+    @cached_property
+    def _ok_prm(self):
+        r = self.rule
+        return ok_and_params(r, F.col(r.column),
+                             resolve_type(self.schema, r.column),
+                             self.run_ts, self.schema)
+
+    @cached_property
+    def _ok(self) -> Column:
+        """The ungated pass verdict; NULL fails."""
+        r = self.rule
+        if self.missing:
+            return F.lit(False)
+        if r.kind == "schema":
+            pred = r.params["predicate"]
+            return F.expr(pred) if isinstance(pred, str) else pred(self.df)
+        if r.kind in ("iter", "map_values"):
+            items, verdict, _ = self._items
+            # NULL container passes (option-of-array, iter.rs)
+            return F.col(r.column).isNull() | F.forall(
+                items, lambda x: _verdict(r.params["inner"].kind,
+                                          *verdict(x)[:2]))
+        return _verdict(r.kind, F.col(r.column), self._ok_prm[0])
+
+    def _violations(self) -> Column:
+        r = self.rule
+        if self.missing:
+            col = self.missing[0]
+            return _one(make_violation(
+                r.rule_id, col.split(".")[-1], "/" + col.replace(".", "/"),
+                "required", r.message, {}))
+        if r.kind == "schema":
+            return F.when(self._ok, empty_violations()).otherwise(_one(
+                make_violation(r.rule_id, None, "/", r.effective_code,
+                               r.message, {})))
+        field = r.display_name or r.column.split(".")[-1]
+        if r.kind in ("iter", "map_values"):
+            return self._item_violations(field)
+        out = F.when(self._ok, empty_violations())
+        tc = _time_string_target(r, self.schema)
+        if tc:
+            # an unparseable string target is its own violation flavor,
+            # params {actual, format} (tokens.rs:738-747 quoted_parse_error)
+            fmt = r.params.get("format")
+            out = out.when(_parse_target_col(tc, fmt).isNull(), _one(
+                make_violation(r.rule_id, field, r.location,
+                               r.effective_code, r.message,
+                               {"actual": F.col(r.column),
+                                "format": F.lit(fmt)})))
+        return out.otherwise(_one(make_violation(
+            r.rule_id, field, r.location, r.effective_code, r.message,
+            self._ok_prm[1])))
+
+    # -- iter / map_values --------------------------------------------------
+    @cached_property
+    def _items(self):
+        """Per-element validation of an array (iter: index-suffixed
+        locations, tokens.rs:167-235, golden '/test/1' iter.rs:26) or of
+        a map's values (locations carry the KEY, error.rs:117-158,
+        golden '/name/3/stuff'), as higher-order functions that stay in
+        codegen. Returns (items, verdict, leaf): ``verdict(item)`` is
+        (element value, ok, params); ``leaf`` is the location suffix."""
+        r = self.rule
+        inner: Rule = r.params["inner"]
+        sub = inner.column  # optional subfield of struct elements
+        col = F.col(r.column)
+        ctype = resolve_type(self.schema, r.column)
+        is_map = r.kind == "map_values"
+        items = F.map_entries(col) if is_map else col
+        etype = (ctype.valueType if isinstance(ctype, T.MapType)
+                 else ctype.elementType if isinstance(ctype, T.ArrayType)
+                 else None)
+        udf = (inner.kind if inner.kind in ("email", "url", "phone")
+               else {"v4": "ipv4", "v6": "ipv6"}.get(
+                   inner.params.get("format"), "ip_any")
+               if inner.kind == "ip" else None)
+        if udf and not is_map:
+            # Spark bans Python UDFs inside higher-order-function lambdas
+            # (UNSUPPORTED_FEATURE.LAMBDA_FUNCTION_WITH_PYTHON_UDF): one
+            # top-level Arrow UDF builds an array<boolean> ok-vector,
+            # zipped against the array so the lambdas stay pure Catalyst
+            ok_arr = U.iter_ok(udf)(F.transform(
+                col, lambda x: x[sub] if sub else x))
+            items = F.zip_with(col, ok_arr, lambda x, ok: F.struct(
+                x.alias("v"), ok.alias("ok")))
+
+            def verdict(p):
+                v = p["v"][sub] if sub else p["v"]
+                return v, p["ok"], {"actual": v}
+            return items, verdict, sub
+        edt = (resolve_type(etype, sub)
+               if (sub and isinstance(etype, T.StructType)) else etype)
+
+        def verdict(x):
+            v = x["value"] if is_map else x
+            v = v[sub] if sub else v
+            # top-level ``schema`` threaded so a nested time rule with a
+            # string-typed target_column parses it at runtime too; only
+            # the dedicated parse-error flavor is top-level only (a
+            # nested unparseable target emits the rule's normal code)
+            return (v, *ok_and_params(inner, v, edt, self.run_ts,
+                                      self.schema))
+        # inner display_name renames the location leaf, like
+        # ValidationError::new_field_named (error_location.rs:186-190)
+        return items, verdict, inner.display_name or sub
+
+    def _item_violations(self, field: str) -> Column:
+        r = self.rule
+        inner: Rule = r.params["inner"]
+        items, verdict, leaf = self._items
+
+        def per_item(x: Column, i: Column) -> Column:
+            v, ok, prm = verdict(x)
+            key = x["key"] if r.kind == "map_values" else i
+            loc = F.concat(F.lit(r.location + "/"), key.cast("string"),
+                           F.lit("/" + leaf) if leaf else F.lit(""))
+            viol = make_violation(r.rule_id, field, loc,
+                                  inner.effective_code,
+                                  inner.message or r.message, prm)
+            return F.when(_verdict(inner.kind, v, ok),
+                          F.lit(None).cast(VIOLATION_STRUCT_DDL)) \
+                    .otherwise(viol)
+
+        viols = F.filter(F.transform(items, per_item),
+                         lambda v: v.isNotNull())
+        return F.when(F.col(r.column).isNull(), empty_violations()) \
+                .otherwise(viols)

@@ -1,13 +1,17 @@
 """ValidationEngine — compiles a RuleSet against a DataFrame and produces
 the violations table + normalized view + per-partition verdicts.
 
-Execution shape (SURVEY.md §3.4): ONE wide projection evaluates every
-rule (array-of-violation-struct per rule, flattened), so the source is
-scanned once regardless of rule count; Catalyst CSE folds repeated
-subexpressions (e.g. five rules on the same column) and whole-stage
-codegen inlines the predicates — the distributed analog of the
-reference's monomorphized straight-line `validate()`
-(validify_derive/src/tokens.rs:80-264).
+Execution shape (SURVEY.md §3.4): every rule is lowered once against
+the frame (``compiler.lower``) and the engine only combines the lowered
+parts. Phase 1 scans the source once with the conjunction of every
+rule's screen; phase 2 builds the violation arrays (one per rule,
+flattened) only for the rows phase 1 captured. Catalyst CSE folds
+repeated subexpressions (e.g. five rules on the same column) and
+whole-stage codegen inlines the predicates — the distributed analog of
+the reference's monomorphized straight-line `validate()`
+(validify_derive/src/tokens.rs:80-264). Row-level verdicts
+(``with_valid_flag``, ``partition_report``, ``coverage_report``) use
+the lowered pass predicates alone and build no violation structs.
 
 Violations-table schema (§2.6):
   <key cols...>, rule_id, field, location, code, message,
@@ -17,10 +21,12 @@ Violations-table schema (§2.6):
 from __future__ import annotations
 
 import datetime as _dt
+import operator
 from dataclasses import dataclass
+from functools import reduce
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from . import compiler as C
 from .modifiers import apply_modifiers
@@ -101,6 +107,18 @@ def _release_caches(caches: list) -> None:
         _safe_unpersist(caches.pop())
 
 
+def _all(cols) -> Column:
+    """Conjunction of ``cols`` (True when there are none)."""
+    cols = list(cols)
+    return reduce(operator.and_, cols) if cols else F.lit(True)
+
+
+def _schema_last(lowered: list) -> list:
+    # schema (whole-row) rules run last, never short-circuited
+    # (schema.rs:183-212)
+    return sorted(lowered, key=lambda low: low.rule.kind == "schema")
+
+
 def _chunk_by_weight(rules: list, budget: int) -> list:
     chunks, cur, w = [], [], 0
     for r in rules:
@@ -170,107 +188,43 @@ class ValidationEngine:
     def normalize(self, df: DataFrame) -> DataFrame:
         return apply_modifiers(df, self.ruleset.modifiers)
 
-    # -- payload column-existence (validate_from semantics, §2.4) ----------
+    # -- lowering -----------------------------------------------------------
+    def _lower(self, df: DataFrame, mains: list = None):
+        """(presence, main) rules lowered against ``df``; ``mains``
+        defaults to every main rule of the ruleset."""
+        schema = df.schema
+
+        def lower(rules):
+            return [C.lower(r, schema, self.run_ts, df) for r in rules]
+        return (lower(self.ruleset.presence_rules),
+                lower(self.ruleset.main_rules if mains is None else mains))
+
     @staticmethod
-    def _missing_inputs(rule: Rule, schema) -> list:
-        """Input columns of ``rule`` absent from ``schema``. Non-empty ⇒
-        the rule can't run; it emits a constant `required` violation per
-        row instead of throwing AnalysisException
-        (derive_tests/tests/payload.rs:14-22)."""
-        return [c for c in C.rule_input_columns(rule)
-                if C.resolve_type(schema, c) is None]
+    def _pass_all(presence: list, mains: list, part: str = "passes"):
+        """True ⇔ the row has no violation: the conjunction of every
+        lowered rule's ``part``. A presence failure suppresses the main
+        rules' violations but still fails the row, so presence needs no
+        special case. ``part="screen"`` is violations()' phase 1, which
+        may over-capture (``compiler.Lowered.screen``)."""
+        return _all(getattr(low, part) for low in presence + mains)
 
-    # -- violations --------------------------------------------------------
-    def _pass_all(self, df: DataFrame, prefilter: bool = False):
-        """Phase-1 predicate: True ⇔ row has NO violation. Compact
-        conjunction of per-rule pass predicates — stays inside
-        whole-stage codegen even for large rulesets, unlike the full
-        violation-struct expression (which can exceed codegen method
-        limits and fall back to interpreted eval).
-
-        ``prefilter=True`` (violations() only) lets two-tier validator
-        kinds answer with their pure-codegen fast path — a sound
-        under-approximation of pass, so phase 1 may over-capture rows
-        that phase 2's exact expressions then clear; the Arrow UDF tier
-        leaves the full-table scan entirely (compiler.pass_expr)."""
-        schema = df.schema
-
-        def p(rule):
-            if self._missing_inputs(rule, schema):
-                # missing column ⇒ every (gate-matching) row fails
-                g = C._gate_expr(rule)
-                if g is not None:
-                    return F.when(g, F.lit(False)).otherwise(F.lit(True))
-                return F.lit(False)
-            return F.coalesce(
-                C.pass_expr(rule, schema, self.run_ts, df,
-                            prefilter=prefilter), F.lit(False))
-
-        presence = self.ruleset.presence_rules
-        mains = self.ruleset.main_rules
-        presence_pass = None
-        for r in presence:
-            presence_pass = p(r) if presence_pass is None \
-                else (presence_pass & p(r))
-        main_pass = None
-        for r in mains:
-            main_pass = p(r) if main_pass is None else (main_pass & p(r))
-        if presence_pass is None and main_pass is None:
-            return F.lit(True)
-        if presence_pass is None:
-            return main_pass
-        if main_pass is None:
-            return presence_pass
-        # presence failure gates main rules, but the row still fails
-        return presence_pass & main_pass
-
-    def _violations_array(self, df: DataFrame, rules: list = None,
+    @staticmethod
+    def _violations_array(presence: list, mains: list,
                           emit_presence: bool = True):
-        """Build one flattened array<violation> Column for ``rules``
-        (default: every main rule). Presence rules are always *evaluated*
-        (their failure gates main/schema rules, payload/impl.rs:17-53)
-        but their own violation structs are emitted only when
-        ``emit_presence`` — so chunked evaluation emits each presence
-        violation exactly once."""
-        schema = df.schema
-        presence = self.ruleset.presence_rules
-        pool = self.ruleset.main_rules if rules is None else rules
-        main = [r for r in pool if r.kind != "schema"]
-        schema_rules = [r for r in pool if r.kind == "schema"]
-
-        def compile_or_missing(r):
-            miss = self._missing_inputs(r, schema)
-            if miss:
-                arr = C.compile_missing_column(r, miss[0])
-                g = C._gate_expr(r)
-                if g is not None:
-                    arr = F.when(g, arr).otherwise(C.empty_violations())
-                return arr
-            return C.compile_rule(r, schema, self.run_ts)
-
-        presence_arrays = [compile_or_missing(r) for r in presence]
-        if presence_arrays:
-            presence_ok = F.size(F.flatten(F.array(*presence_arrays))) == 0
-        else:
-            presence_ok = F.lit(True)
-
-        arrays = list(presence_arrays) if emit_presence else []
-        for r in main:
-            arr = compile_or_missing(r)
-            if presence:
-                # presence failure suppresses later-stage rules for the row
-                arr = F.when(presence_ok, arr).otherwise(
-                    C.empty_violations())
-            arrays.append(arr)
-        # schema (whole-row) rules run last, never short-circuited
-        # (schema.rs:183-212)
-        for r in schema_rules:
-            arr = C.compile_schema_rule(r, df)
-            if presence:
-                arr = F.when(presence_ok, arr).otherwise(
-                    C.empty_violations())
-            arrays.append(arr)
-
+        """One flattened array<violation> Column for the lowered
+        ``mains``. Presence rules are always *evaluated* (their failure
+        gates main and schema rules, payload/impl.rs:17-53) but their
+        own violation structs are emitted only when ``emit_presence`` —
+        so chunked evaluation emits each presence violation exactly
+        once."""
+        arrays = [low.violations for low in presence] if emit_presence \
+            else []
+        presence_ok = _all(low.passes for low in presence) if presence \
+            else None
+        for low in _schema_last(mains):
+            arrays.append(low.violations if presence_ok is None else
+                          F.when(presence_ok, low.violations)
+                          .otherwise(C.empty_violations()))
         if not arrays:
             return C.empty_violations()
         return F.flatten(F.array(*arrays))
@@ -296,7 +250,7 @@ class ValidationEngine:
         level — warn and rely on Spark's expression splitting /
         non-codegen fallback (which compile fine; the 64 KB hard
         failure needs a fused multi-rule unit)."""
-        viol = self._violations_array(empty, rules=chunk_rules,
+        viol = self._violations_array(*self._lower(empty, chunk_rules),
                                       emit_presence=emit_presence)
         probe = (empty.select(*carry, viol.alias("_v"))
                  .select(*carry, F.explode("_v").alias("v"))
@@ -349,7 +303,8 @@ class ValidationEngine:
         # compiled; the shuffle moves only failing rows (violation
         # minority), which is also the natural partitioning for
         # writing the violations table.
-        failing = src.filter(~self._pass_all(src, prefilter=True))
+        presence, mains = self._lower(src)
+        failing = src.filter(~self._pass_all(presence, mains, "screen"))
         if barrier:
             if self.key_cols:
                 failing = failing.repartition(
@@ -358,9 +313,15 @@ class ValidationEngine:
                 failing = failing.repartition(
                     df.sparkSession.sparkContext.defaultParallelism)
 
+        # phase 2 reuses phase 1's lowering: ``failing`` keeps
+        # ``src``'s attributes, so even frame-bound schema-rule
+        # callables resolve on it
+        lowered = {id(low.rule): low for low in mains}
+
         def project(rows, chunk_rules, emit_presence, observe=None):
             viol = self._violations_array(
-                rows, rules=chunk_rules, emit_presence=emit_presence)
+                presence, [lowered[id(r)] for r in chunk_rules],
+                emit_presence)
             per_row = rows.select(*carry, viol.alias("_v"))
             if observe is not None:
                 per_row = observe(per_row, F.size("_v") > 0)
@@ -436,7 +397,8 @@ class ValidationEngine:
             # no single branch sees all of a row's violations, so the
             # first branch, which reads every captured row, carries the
             # exact pass predicate (compact, unlike the violation arrays)
-            out = project(observe_rows(failing, ~self._pass_all(failing)),
+            out = project(observe_rows(failing,
+                                       ~self._pass_all(presence, mains)),
                           chunks[0], emit_presence=True)
         else:
             out = project(failing, chunks[0], emit_presence=True,
@@ -468,7 +430,7 @@ class ValidationEngine:
     def with_valid_flag(self, df: DataFrame,
                         flag: str = "is_valid") -> DataFrame:
         src = self.normalize(df)
-        return src.withColumn(flag, self._pass_all(src))
+        return src.withColumn(flag, self._pass_all(*self._lower(src)))
 
     # -- per-rule coverage (ruleset lint) -----------------------------------
     def coverage_report(self, df: DataFrame,
@@ -478,50 +440,23 @@ class ValidationEngine:
         (a rule that never fires is dead weight or a bug; one that
         fires on every row is usually a schema mismatch).
 
-        ONE scan: every rule's fail indicator folds into a single
-        aggregation (map-side combined), then the 1-row wide result
-        explodes to long form. Semantics match ``violations()``
-        exactly — variant gates honored, presence failure suppresses
-        main/schema rules, Option semantics (NULL passes everything
-        but required), missing columns count as per-row failures.
+        ONE scan: every rule's fail indicator (``~passes`` of its
+        lowering, so semantics match ``violations()`` exactly) folds
+        into a single aggregation (map-side combined), then the 1-row
+        wide result explodes to long form. A presence failure
+        suppresses the main and schema rules' counts.
 
         Output: rule_id, kind, location, n_rows, n_failed, fail_rate.
         """
         src = df if pre_normalized else self.normalize(df)
-        schema = src.schema
-
-        def arr(r):
-            miss = self._missing_inputs(r, schema)
-            if miss:
-                a = C.compile_missing_column(r, miss[0])
-                g = C._gate_expr(r)
-                if g is not None:
-                    a = F.when(g, a).otherwise(C.empty_violations())
-                return a
-            return C.compile_rule(r, schema, self.run_ts)
-
-        presence = self.ruleset.presence_rules
-        mains = [r for r in self.ruleset.main_rules
-                 if r.kind != "schema"]
-        schema_rules = [r for r in self.ruleset.main_rules
-                        if r.kind == "schema"]
-        presence_arrays = [arr(r) for r in presence]
-        presence_ok = (F.size(F.flatten(F.array(*presence_arrays))) == 0
-                       if presence_arrays else F.lit(True))
-
-        entries, aggs = [], [F.count(F.lit(1)).alias("__n")]
-        for i, r in enumerate(presence):
-            fired = F.size(presence_arrays[i]) > 0
-            aggs.append(F.sum(fired.cast("long")).alias(f"__f_{i}"))
-            entries.append((i, r))
-        off = len(presence)
-        for j, r in enumerate(mains + schema_rules):
-            a = (C.compile_schema_rule(r, src) if r.kind == "schema"
-                 else arr(r))
-            fired = presence_ok & (F.size(a) > 0)
-            aggs.append(
-                F.sum(fired.cast("long")).alias(f"__f_{off + j}"))
-            entries.append((off + j, r))
+        presence, mains = self._lower(src)
+        mains = _schema_last(mains)
+        presence_ok = _all(low.passes for low in presence)
+        fired = ([~low.passes for low in presence]
+                 + [presence_ok & ~low.passes for low in mains])
+        aggs = [F.count(F.lit(1)).alias("__n")] + [
+            F.sum(f.cast("long")).alias(f"__f_{i}")
+            for i, f in enumerate(fired)]
         wide = src.agg(*aggs)
         rows = F.array(*[
             F.struct(F.lit(r.rule_id).alias("rule_id"),
@@ -529,7 +464,7 @@ class ValidationEngine:
                      F.lit(r.location).alias("location"),
                      F.col("__n").alias("n_rows"),
                      F.col(f"__f_{i}").alias("n_failed"))
-            for i, r in entries])
+            for i, r in enumerate(low.rule for low in presence + mains)])
         return (wide.select(F.explode(rows).alias("r")).select("r.*")
                 .withColumn("fail_rate",
                             F.round(F.col("n_failed")
@@ -552,7 +487,7 @@ class ValidationEngine:
         src = self.normalize(df)
         pc = F.col(partition_col) if isinstance(partition_col, str) \
             else partition_col
-        failed = (~self._pass_all(src)).cast("long")
+        failed = (~self._pass_all(*self._lower(src))).cast("long")
         return (src
                 .groupBy(pc.alias("partition_id"))
                 .agg(F.count("*").alias("n_rows"),

@@ -116,8 +116,9 @@ def stream_partition_metrics(engine: ValidationEngine,
     """Per-event-time-window validation metrics with a watermark for
     late data: (window, n_rows, n_failed_rows, passed). Append output
     mode — windows finalize when the watermark passes."""
-    src = engine.normalize(stream_df).withWatermark(ts_col, watermark)
-    failed = (~engine._pass_all(src)).cast("long")
+    src = (engine.with_valid_flag(stream_df, "__is_valid")
+           .withWatermark(ts_col, watermark))
+    failed = (~F.col("__is_valid")).cast("long")
     return (src
             .groupBy(F.window(F.col(ts_col), window).alias("window"))
             .agg(F.count(F.lit(1)).alias("n_rows"),
