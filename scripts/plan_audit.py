@@ -138,9 +138,9 @@ def main() -> int:
         "scan-evaluated DataFilters (complex predicates evaluate inside",
         "the scan — no separate Filter stage), columns read per scan",
         "(pruning), whole-stage-codegen units, Python/Arrow operators",
-        "(UDF tier + mapInPandas — the deliberate slow-path surface;",
-        "rules appear twice because phase 1 and phase 2 each carry the",
-        "gated UDF, and phase 2 only sees failing rows), and",
+        "(UDF tier + mapInPandas — the deliberate slow-path surface:",
+        "email/url carry their gated UDF in phase 2 only, iter rules",
+        "in both phases; ip and phone are pure SQL), and",
         "codegen_fallbacks = Janino `Failed to compile` errors logged",
         "while the query ran (a fallback means interpreted eval of",
         "that stage at scale — MUST be 0 everywhere).",

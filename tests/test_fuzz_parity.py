@@ -92,7 +92,8 @@ REGEX_POOL = ["[0-9]{2}", "Customer", "BUILD|AUTO", "[A-Z]{5,}",
 # get deterministic space padding (left key%3, right key%2) so the
 # trim-modifier x two-tier-dispatch ordering is exercised: trimmed ⇒
 # base verdict; untrimmed padded ⇒ False for every kind EXCEPT phone
-# (whose validator strips [\s().-] itself, udf_tier._PHONE_STRIP).
+# (whose validator strips Python's [\s().-] itself,
+# sql_builders.PHONE_STRIP_RE).
 # ---------------------------------------------------------------------------
 
 UDF_COL = "udf_val"

@@ -23,6 +23,20 @@ def test_map_values_scalar(spark):
     assert v[0]["code"] == "range"
 
 
+@pytest.mark.parametrize("inner,good,bad", [
+    (Rule(kind="phone", column=None), "+1 415 237 0800", "14152370800"),
+    (Rule(kind="ip", column=None, params={"format": "v6"}),
+     "2001:db8::1", "192.168.0.1"),
+], ids=["phone", "ip_v6"])
+def test_map_values_sql_inner(spark, inner, good, bad):
+    # ip and phone are pure SQL, so they run inside the map lambda
+    v = run(spark, [(1, {"a": good, "b": bad})],
+            "id int, m map<string,string>", [map_values_("m", inner)])
+    assert len(v) == 1
+    assert v[0]["location"] == "/m/b"
+    assert v[0]["code"] == inner.kind
+
+
 def test_map_values_struct_subfield_location(spark):
     # byname MAP<STRING, STRUCT<stuff: ARRAY<INT>>> with length(min=2)
     # on stuff → location '/name/3/stuff' (map key '3')

@@ -102,25 +102,88 @@ def test_email_two_tier_matches_full_python(spark, strings):
         assert got[i] == _email_full(s), repr(s)
 
 
+def test_email_literal_in_non_ascii_domain_matches_python(spark):
+    # Python's IGNORECASE folds U+212A KELVIN SIGN and U+017F LONG S into
+    # the literal class [A-f], Java's (?i) does not: the two engines then
+    # capture different '[...]' literals, so the SQL fast path must leave
+    # non-ASCII domains to the Python slow path
+    from validify_spark.validators.sql_builders import email_ok
+    from validify_spark.validators.udf_tier import _email_full
+    strings = ["a@[\u212a[1.2.3.4]", "a@[\u212a[::1]", "a@[\u017f[::1]",
+               "a@[::1]", "a@[1.2.3.4]", "a@[fe80::1%1]", "a@[::1]x"]
+    df = spark.createDataFrame(list(enumerate(strings)), "i int, s string")
+    got = {r["i"]: r["ok"] for r in
+           df.select("i", F.coalesce(email_ok(F.col("s")),
+                                     F.lit(False)).alias("ok"))
+             .collect()}
+    assert [got[i] for i in range(len(strings))] == [
+        _email_full(s) for s in strings]
+
+
 @settings(max_examples=5, deadline=None)
 @given(st.lists(st.one_of(
     st.from_regex(r"[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}",
                   fullmatch=True),
+    st.ip_addresses(v=6).map(str),
+    st.ip_addresses(v=6).map(lambda a: a.exploded),
     st.text(alphabet="0123456789.:abcdef%", min_size=1, max_size=20)),
     min_size=1, max_size=80))
 def test_ip_any_two_tier_matches_python(spark, strings):
-    # two-tier ip (v4 regex + colon-gated v6 UDF) == Python reference
+    # the SQL ip regexes (v4 | v6, and v6 alone) == Python reference
     # (ipaddress with the zone-id rejection)
-    from validify_spark.validators.sql_builders import ip_any_ok
-    from validify_spark.validators.udf_tier import _is_ip_any
+    from validify_spark.validators.sql_builders import ip_any_ok, ipv6_ok
+    from validify_spark.validators.udf_tier import _is_ip_any, _is_ipv6
+    df = spark.createDataFrame([(i, s) for i, s in enumerate(strings)],
+                               "i int, s string")
+    got = {r["i"]: (bool(r["any"]), bool(r["v6"])) for r in
+           df.select("i",
+                     F.coalesce(ip_any_ok(F.col("s")),
+                                F.lit(False)).alias("any"),
+                     F.coalesce(ipv6_ok(F.col("s")),
+                                F.lit(False)).alias("v6"))
+             .collect()}
+    for i, s in enumerate(strings):
+        assert got[i] == (_is_ip_any(s), _is_ipv6(s)), repr(s)
+
+
+# '+', ASCII digits, the separators, whitespace that only Python's \s
+# matches, and non-ASCII digits
+_phone_alphabet = st.sampled_from(
+    list("+0123456789().-") + ["\x1c", "\x85", "\u2007", "\u3000",
+                               "\uff11", "\u0663"])
+
+
+def _phone_strings():
+    from validify_spark.validators.phone_metadata import (
+        ASSIGNED_CALLING_CODES)
+    plausible = st.tuples(
+        st.sampled_from(sorted(ASSIGNED_CALLING_CODES)),
+        st.text(alphabet=_phone_alphabet, max_size=14),
+    ).map(lambda t: "+" + t[0] + t[1].replace("+", ""))
+    return st.one_of(plausible,
+                     st.text(alphabet=_phone_alphabet, max_size=20))
+
+
+@settings(max_examples=5, deadline=None)
+@given(st.lists(_phone_strings(), min_size=1, max_size=80))
+def test_phone_sql_matches_python(spark, strings):
+    # the generated plan regex == the Python plan check it mirrors; the
+    # calling-code alternation is exact only because codes are
+    # prefix-free
+    from validify_spark.validators.phone_metadata import (
+        ASSIGNED_CALLING_CODES as codes)
+    from validify_spark.validators.sql_builders import phone_ok
+    from validify_spark.validators.udf_tier import _is_phone
+    assert not [(a, b) for a in codes for b in codes
+                if a != b and b.startswith(a)]
     df = spark.createDataFrame([(i, s) for i, s in enumerate(strings)],
                                "i int, s string")
     got = {r["i"]: bool(r["ok"]) for r in
-           df.select("i", F.coalesce(ip_any_ok(F.col("s")),
+           df.select("i", F.coalesce(phone_ok(F.col("s")),
                                      F.lit(False)).alias("ok"))
              .collect()}
     for i, s in enumerate(strings):
-        assert got[i] == _is_ip_any(s), repr(s)
+        assert got[i] == _is_phone(s), repr(s)
 
 
 _url_alphabet = st.sampled_from(

@@ -1,7 +1,7 @@
 """Round-3 regression tests: ADVICE fixes (gated schema rules in phase
 2, audit __pid vs modifiers, jaccard max_df default, audit read-back
 hardening, streaming chunk-boundary sort) and VERDICT items (scalable
-cosine_topk, auto-scaled LSH planes, phone UDF gating, storage-backed
+cosine_topk, auto-scaled LSH planes, pure-SQL phone and ip, storage-backed
 simhash fingerprints, runtime time-target parse errors, Iceberg write
 contract)."""
 
@@ -286,7 +286,7 @@ def test_ann_recall_with_auto_planes(spark):
 
 
 # ---------------------------------------------------------------------------
-# VERDICT 4: phone UDF gating
+# VERDICT 4: phone and ip run as pure SQL
 # ---------------------------------------------------------------------------
 
 
@@ -299,10 +299,15 @@ def test_phone_gate_correct_and_in_plan(spark):
                            key_cols=["id"])
     bad = {r["id"] for r in eng.violations(df).collect()}
     assert bad == {2, 3, 4}  # NULL passes; both '+' numbers valid
-    # the Arrow UDF is fed the gated CASE WHEN column, not the raw one
-    flagged = eng.with_valid_flag(df)
-    plan = flagged._jdf.queryExecution().executedPlan().toString()
-    assert "CASE WHEN" in plan and "contains" in plan.lower()
+    # phone and ip (any, v6) need no Python evaluation in either phase
+    eng = ValidationEngine(vs.RuleSet(rules=[
+        vs.phone("p"), vs.ip("p"), vs.ip("p", format="v6")]),
+        key_cols=["id"])
+    for out in (eng.with_valid_flag(df), eng.violations(df)):
+        out.collect()
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" not in plan
+        assert "BatchEvalPython" not in plan
 
 
 # ---------------------------------------------------------------------------

@@ -5,6 +5,8 @@ run_ts, and iter (per-element) validation with indexed locations
 
 import datetime as dt
 
+import pytest
+
 from validify_spark import (
     RuleSet, ValidationEngine, email, iter_, length, range_, time,
 )
@@ -94,16 +96,21 @@ def test_null_timestamp_passes(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_iter_scalar_elements(spark):
+@pytest.mark.parametrize("kind,params,items", [
+    ("email", {}, ["ok@mail.com", "notanemail", "x@y.com"]),
+    ("phone", {}, ["+14152370800", "14152370800", None]),
+    ("ip", {}, ["10.0.0.1", "10.0.0.256", "fe80::1"]),
+    ("ip", {"format": "v6"}, ["::1", "::1%eth0", "1:2:3:4:5:6:1.2.3.4"]),
+], ids=["email", "phone", "ip", "ip_v6"])
+def test_iter_scalar_elements(spark, kind, params, items):
     from validify_spark.rules import Rule
-    inner = Rule(kind="email", column=None)
-    v = run(spark, [(1, ["ok@mail.com", "notanemail", "x@y.com"]),
-                    (2, None)],
+    inner = Rule(kind=kind, column=None, params=params)
+    v = run(spark, [(1, items), (2, None)],
             "id int, emails array<string>",
             [iter_("emails", inner)])
     assert len(v) == 1
     assert v[0]["location"] == "/emails/1"
-    assert v[0]["code"] == "email"
+    assert v[0]["code"] == kind
 
 
 def test_iter_range_on_ints(spark):

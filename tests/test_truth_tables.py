@@ -129,8 +129,8 @@ PHONE_PLAN_CASES = [
 
 # Per-RANGE assignments are beyond the vendored generalDesc subset:
 # NANP area code 999 is unassigned (libphonenumber rejects it) but
-# matches the coarse [2-9]\d{2} pattern. Strict xfail — flips to pass
-# the moment the `phonenumbers` package lands on the seam.
+# matches the coarse [2-9]\d{2} pattern. Strict xfail: closing it needs
+# full libphonenumber metadata, which is not vendored.
 PHONE_RANGE_CASES = [
     ("+1 999 234 5678", False),   # unassigned NANP area code 999
 ]
@@ -183,11 +183,6 @@ def test_phone_truth_table(spark):
     _assert_table(spark, PHONE_CASES, phone("v"))
 
 
-def _phonenumbers_missing() -> bool:
-    from validify_spark.validators import udf_tier
-    return udf_tier._phonenumbers is None
-
-
 def test_phone_numbering_plan_subset(spark):
     """r4 xfail flipped to pass: the vendored plan subset rejects
     plan-invalid numbers the bare E.164 shape check accepted."""
@@ -195,7 +190,6 @@ def test_phone_numbering_plan_subset(spark):
 
 
 @pytest.mark.xfail(
-    condition=_phonenumbers_missing(),
     reason="per-range metadata (unassigned NANP area 999) is beyond "
            "the vendored generalDesc subset; exact verdicts need full "
            "libphonenumber metadata (reference phone.rs:1-11)",

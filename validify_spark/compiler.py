@@ -178,8 +178,7 @@ def ok_and_params(rule: Rule, c: Column, dtype: Optional[T.DataType],
         return c.eqNullSafe(other), {"actual": c, "target": other}
 
     if kind == "email":
-        return V.email_ok(c, with_slow_path=p.get("slow_path", True)), {
-            "actual": c}
+        return V.email_ok(c), {"actual": c}
 
     if kind == "url":
         # two-tier: regex fast path in codegen, WHATWG-parse UDF fed
@@ -191,13 +190,13 @@ def ok_and_params(rule: Rule, c: Column, dtype: Optional[T.DataType],
         if fmt == "v4":
             ok = V.ipv4_ok(c)
         elif fmt == "v6":
-            ok = V.ipv6_ok_gated(c)
+            ok = V.ipv6_ok(c)
         else:
             ok = V.ip_any_ok(c)
         return ok, {"actual": c}
 
     if kind == "phone":
-        return U.phone_ok(c), {"actual": c}
+        return V.phone_ok(c), {"actual": c}
 
     if kind == "credit_card":
         return V.credit_card_ok(c), {"actual": c}
@@ -450,9 +449,8 @@ class Lowered:
     - ``screen``: the phase-1 filter. For email/url it is the pure
       codegen fast path, a sound under-approximation of ``passes``
       (fast True ⇒ valid), so the Arrow UDF tier leaves the full-table
-      scan and runs only on the captured minority. `phone` and `ip`
-      have no such fast path that decides most rows, so for them and
-      every other kind it is ``passes``.
+      scan and runs only on the captured minority. Every other kind is
+      pure SQL, so its screen is ``passes``.
     - ``violations``: the ``array<violation-struct>`` (usually 0/1
       elements; iter/map_values may emit several), empty ⇔ ``passes``.
 
@@ -571,16 +569,12 @@ class Lowered:
         etype = (ctype.valueType if isinstance(ctype, T.MapType)
                  else ctype.elementType if isinstance(ctype, T.ArrayType)
                  else None)
-        udf = (inner.kind if inner.kind in ("email", "url", "phone")
-               else {"v4": "ipv4", "v6": "ipv6"}.get(
-                   inner.params.get("format"), "ip_any")
-               if inner.kind == "ip" else None)
-        if udf and not is_map:
+        if inner.kind in ("email", "url") and not is_map:
             # Spark bans Python UDFs inside higher-order-function lambdas
             # (UNSUPPORTED_FEATURE.LAMBDA_FUNCTION_WITH_PYTHON_UDF): one
             # top-level Arrow UDF builds an array<boolean> ok-vector,
             # zipped against the array so the lambdas stay pure Catalyst
-            ok_arr = U.iter_ok(udf)(F.transform(
+            ok_arr = U.iter_ok(inner.kind)(F.transform(
                 col, lambda x: x[sub] if sub else x))
             items = F.zip_with(col, ok_arr, lambda x, ok: F.struct(
                 x.alias("v"), ok.alias("ok")))

@@ -145,7 +145,7 @@ def lang_id(df: DataFrame, id_col: str = "doc_id",
 
     ``classifier`` is the production plug-in seam: a Column-builder
     (typically an Arrow ``pandas_udf`` wrapping a fastText-grade model,
-    exactly the phone-validator pattern in validators/udf_tier.py)
+    exactly the url-validator pattern in validators/udf_tier.py)
     mapping the text Column to a
     ``struct<pred_lang:string, lang_hits:bigint>`` Column. When given,
     it replaces the heuristic and the rest of the pipeline (schema,

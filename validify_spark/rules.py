@@ -487,8 +487,7 @@ class RuleSet:
             if inner.kind in ("iter", "map_values", "schema", "required"):
                 # tokens.rs:170-175: no nested iter/validate inside iter
                 raise RuleSpecError(f"{r.kind}: cannot nest {inner.kind}")
-            if r.kind == "map_values" and inner.kind in (
-                    "email", "url", "phone", "ip"):
+            if r.kind == "map_values" and inner.kind in ("email", "url"):
                 raise RuleSpecError(
                     "map_values: UDF-backed inner kinds unsupported "
                     "(Spark bans UDFs in higher-order lambdas)")

@@ -21,13 +21,14 @@ Everything here is public ITU E.164 / national-numbering-plan fact:
 APPROXIMATION BOUNDARY (recorded by the strict-xfail
 tests/test_truth_tables.py::test_phone_per_range_boundary): coarse
 patterns cannot see per-range assignments, e.g. NANP area code 999 is
-unassigned but matches ``[2-9]\\d{2}``; full libphonenumber metadata
-(the `phonenumbers` package, when installable) closes that and the
-seam in udf_tier switches to it automatically. Within the subset the
-patterns err toward OVER-acceptance (the same direction as that
-documented boundary, so the xfail stays the single record of the
-gap): service/short ranges are included where they change the length
-set (AU 13/1300/1800, SG 800/1800), never excluded by guess.
+unassigned but matches ``[2-9]\\d{2}``; only full libphonenumber
+metadata (the `phonenumbers` package, not vendored) closes that. These
+tables are the plan's only encoding: ``sql_builders.PHONE_RE`` is
+generated from them, and ``plan_valid`` is its parity oracle. Within
+the subset the patterns err toward OVER-acceptance (the same direction
+as that documented boundary, so the xfail stays the single record of
+the gap): service/short ranges are included where they change the
+length set (AU 13/1300/1800, SG 800/1800), never excluded by guess.
 """
 
 from __future__ import annotations

@@ -1,12 +1,16 @@
-"""Pure-SQL (Catalyst Column) validator fast paths.
+"""Pure-SQL (Catalyst Column) validators.
 
 Each builder returns a boolean Column — True ⇔ value passes. These stay
-inside whole-stage codegen; no Python crosses the row path.
+inside whole-stage codegen; no Python crosses the row path. ip and phone
+are exact here; email and url consult the UDF tier only for the rows
+their fast path cannot decide.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
+
+from . import phone_metadata as _phone_plan
 
 # ---------------------------------------------------------------------------
 # IPv4 — exact Rust `std::net::Ipv4Addr::from_str` semantics
@@ -23,13 +27,79 @@ def ipv4_ok(c: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
+# IPv6 — exact Python `ipaddress.IPv6Address` semantics (the parity
+# oracle udf_tier._is_ipv6; ip.rs:31-139): 1-4 ASCII hex digits per
+# hextet, one '::' standing for at least one zero hextet, an IPv4 tail
+# counting as two hextets, no zone id. One alternative per shape: 8
+# hextets, 6 plus the tail, and k hextets '::' up to 7-k more (5-k plus
+# the tail).
+# ---------------------------------------------------------------------------
+
+_HEX = "[0-9A-Fa-f]{1,4}"
+_V4_TAIL = rf"{_OCTET}(?:\.{_OCTET}){{3}}"
+
+
+def _ipv6_forms():
+    yield rf"(?:{_HEX}:){{7}}{_HEX}"
+    yield rf"(?:{_HEX}:){{6}}{_V4_TAIL}"
+    for k in range(8):
+        head = ":".join([_HEX] * k) + "::"
+        yield head + (rf"(?:{_HEX}(?::{_HEX}){{0,{6 - k}}})?" if k < 7
+                      else "")
+        if k < 6:
+            yield head + rf"(?:{_HEX}:){{0,{5 - k}}}{_V4_TAIL}"
+
+
+IPV6_RE = rf"^(?:{'|'.join(_ipv6_forms())})\z"
+
+
+def ipv6_ok(c: Column) -> Column:
+    return c.rlike(IPV6_RE)
+
+
+def ip_any_ok(c: Column) -> Column:
+    return ipv4_ok(c) | ipv6_ok(c)
+
+
+# ---------------------------------------------------------------------------
+# phone — the vendored numbering plan (phone_metadata.py; reference
+# phone.rs:1-11), generated from its tables so they stay its only
+# encoding. Mirrors the parity oracle udf_tier._is_phone: strip Python's
+# `[\s().-]`, then '+', 8-15 ASCII digits, an assigned calling code and
+# that code's plan. Java's `\s` is ASCII-only, so the strip class lists
+# all 29 code points of Python's. Calling codes are prefix-free, so one
+# alternation over them is the longest-prefix lookup.
+# ---------------------------------------------------------------------------
+
+PHONE_STRIP_RE = (r"[\t\n\x0B\f\r\x1C-\x20\x85\xA0\u1680\u2000-\u200A"
+                  r"\u2028\u2029\u202F\u205F\u3000().\-]")
+
+
+def _phone_forms():
+    plain = sorted(cc for cc in _phone_plan.ASSIGNED_CALLING_CODES
+                   if cc not in _phone_plan.PLAN)
+    yield rf"(?:{'|'.join(plain)})[0-9]{{4,}}"
+    for cc, plan in _phone_plan.PLAN.items():
+        lengths = "|".join(f"[0-9]{{{n}}}" for n in sorted(plan.lengths))
+        body = plan.pattern.pattern if plan.pattern else "[0-9]*"
+        yield rf"{cc}(?=(?:{lengths})\z)(?:{body})"
+
+
+PHONE_RE = rf"^\+(?=[0-9]{{8,15}}\z)(?:{'|'.join(_phone_forms())})\z"
+
+
+def phone_ok(c: Column) -> Column:
+    return F.regexp_replace(c, PHONE_STRIP_RE, "").rlike(PHONE_RE)
+
+
+# ---------------------------------------------------------------------------
 # Email — HTML5-spec fast path
 # (reference: validify/src/validation/email.rs:22-72; regexes 10-15).
 # Split at the LAST '@'; RFC5321 byte-length caps (user ≤64, domain ≤255 —
 # the reference uses str::len = BYTES there, hence octet_length);
-# user/domain regexes from the HTML5 spec; '[ip]' literal domains.
-# The IDN (non-ASCII domain) retry and ipv6-literal tail live in the UDF
-# tier and are consulted only when this fast path fails.
+# user/domain regexes from the HTML5 spec; '[ip]' literal domains (v4 or
+# v6). The IDN (non-ASCII domain) retry lives in the UDF tier and is
+# consulted only when this fast path fails.
 # ---------------------------------------------------------------------------
 
 EMAIL_USER_RE = r"^(?i)[a-z0-9.!#$%&'*+/=?^_`{|}~-]+\z"
@@ -48,37 +118,39 @@ def _email_parts(c: Column):
     return user, domain
 
 
+_NON_ASCII_RE = r"[^\x00-\x7F]"
+
+
 def email_ok_fast(c: Column) -> Column:
-    """ASCII fast path: exact for every email whose domain needs neither
-    IDN conversion nor an ipv6 literal."""
+    """ASCII fast path: exact for every email whose domain needs no IDN
+    conversion, and never true for an invalid one."""
     user, domain = _email_parts(c)
     structure = (F.length(c) > 0) & c.contains("@")
     caps = (F.octet_length(user) <= 64) & (F.octet_length(domain) <= 255)
     user_ok = user.rlike(EMAIL_USER_RE)
     domain_ok = domain.rlike(EMAIL_DOMAIN_RE)
+    # ASCII domains only: Python's IGNORECASE lets the literal class take
+    # some non-ASCII letters (U+212A KELVIN SIGN folds into [A-f]), so in
+    # a non-ASCII domain Java and Python can capture different literals
     ip_literal = F.regexp_extract(domain, EMAIL_LITERAL_RE, 1)
-    literal_ok = domain.rlike(EMAIL_LITERAL_RE) & ipv4_ok(ip_literal)
+    literal_ok = (domain.rlike(EMAIL_LITERAL_RE)
+                  & ~domain.rlike(_NON_ASCII_RE) & ip_any_ok(ip_literal))
     return structure & caps & user_ok & (domain_ok | literal_ok)
 
 
 def email_needs_slow(c: Column) -> Column:
     """Rows where the fast path can't decide: structurally plausible email
-    whose domain is non-ASCII (IDN) or an ipv6-ish literal."""
+    whose domain is non-ASCII (IDN)."""
     user, domain = _email_parts(c)
     structure = (F.length(c) > 0) & c.contains("@")
     caps = (F.octet_length(user) <= 64) & (F.octet_length(domain) <= 255)
     user_ok = user.rlike(EMAIL_USER_RE)
-    undecided = domain.rlike(r"[^\x00-\x7F]") | (
-        domain.rlike(EMAIL_LITERAL_RE)
-        & F.regexp_extract(domain, EMAIL_LITERAL_RE, 1).contains(":"))
-    return structure & caps & user_ok & undecided
+    return structure & caps & user_ok & domain.rlike(_NON_ASCII_RE)
 
 
-def email_ok(c: Column, with_slow_path: bool = True) -> Column:
-    fast = email_ok_fast(c)
-    if not with_slow_path:
-        return fast
+def email_ok(c: Column) -> Column:
     from . import udf_tier as U
+    fast = email_ok_fast(c)
     # feed the UDF NULL for rows the fast path already decided, so the
     # Arrow batch does real work only on the undecided minority
     slow_input = F.when(email_needs_slow(c) & ~fast, c)
@@ -158,20 +230,3 @@ def url_ok(c: Column) -> Column:
     slow_input = F.when(undecided, c)
     return fast | F.coalesce(U.url_slow_ok(slow_input), F.lit(False))
 
-
-def ip_any_ok(c: Column) -> Column:
-    """Two-tier ip (any format): v4 decided by regex in codegen; only
-    colon-containing non-v4 strings (the only possible v6s) reach the
-    UDF, fed NULL otherwise."""
-    from . import udf_tier as U
-    v4 = ipv4_ok(c)
-    maybe_v6 = c.contains(":") & ~F.coalesce(v4, F.lit(False))
-    return v4 | F.coalesce(U.ipv6_ok(F.when(maybe_v6, c)), F.lit(False))
-
-
-def ipv6_ok_gated(c: Column) -> Column:
-    """v6-only check with a codegen pre-gate: strings without ':' are
-    never valid IPv6, so the UDF sees NULL for them."""
-    from . import udf_tier as U
-    return F.coalesce(
-        U.ipv6_ok(F.when(c.contains(":"), c)), F.lit(False))

@@ -1,6 +1,8 @@
 """Arrow-vectorized pandas UDF tier — the slow path, used only where SQL
 cannot express the reference's exact semantics (SURVEY.md §2.9: "no
-per-row Python anywhere — only vectorized pandas/Arrow UDFs").
+per-row Python anywhere — only vectorized pandas/Arrow UDFs"): WHATWG
+url parsing and IDN email domains. The ip and phone checks here are the
+parity oracles of their exact SQL forms in ``sql_builders``.
 
 Every UDF here is ``pd.Series -> pd.Series`` batch-at-a-time; NULL in ⇒
 NULL out, so callers can gate work by feeding NULL for already-decided
@@ -14,17 +16,9 @@ import re
 import urllib.parse
 
 import pandas as pd
-from pyspark.sql import Column, functions as F
+from pyspark.sql import Column
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
-
-# optional exact phone metadata (libphonenumber lineage, like the
-# reference's `phonenumber` crate — validify/src/validation/phone.rs:1-11)
-try:  # pragma: no cover - availability depends on environment
-    import phonenumbers as _phonenumbers
-except Exception:  # noqa: BLE001
-    _phonenumbers = None
-
 
 def _apply_bool(s: pd.Series, fn) -> pd.Series:
     out = s.map(lambda v: None if v is None else bool(fn(v)))
@@ -34,7 +28,8 @@ def _apply_bool(s: pd.Series, fn) -> pd.Series:
 # ---------------------------------------------------------------------------
 # ipv6 / ip — Python `ipaddress` has the same strict RFC semantics as Rust
 # std::net (no spaces, no unicode digits, no leading zeros in v4 octets).
-# Reference truth table: ip.rs:31-139.
+# Reference truth table: ip.rs:31-139. Parity oracles for the SQL ip
+# regexes; _is_ip_any also decides ip literals in _email_domain_slow.
 # ---------------------------------------------------------------------------
 
 
@@ -58,24 +53,6 @@ def _is_ip_any(v: str) -> bool:
         return True
     except ValueError:
         return False
-
-
-@pandas_udf(BooleanType())
-def _ipv6_udf(s: pd.Series) -> pd.Series:
-    return _apply_bool(s, _is_ipv6)
-
-
-@pandas_udf(BooleanType())
-def _ip_any_udf(s: pd.Series) -> pd.Series:
-    return _apply_bool(s, _is_ip_any)
-
-
-def ipv6_ok(c: Column) -> Column:
-    return _ipv6_udf(c)
-
-
-def ip_any_ok(c: Column) -> Column:
-    return _ip_any_udf(c)
 
 
 # ---------------------------------------------------------------------------
@@ -116,20 +93,15 @@ def _url_udf(s: pd.Series) -> pd.Series:
     return _apply_bool(s, _is_url)
 
 
-def url_ok(c: Column) -> Column:
-    return _url_udf(c)
-
-
-# alias used by the two-tier dispatch in sql_builders.url_ok — receives
-# NULL for rows the SQL fast path already decided
+# used by the two-tier dispatch in sql_builders.url_ok — receives NULL
+# for rows the SQL fast path already decided
 def url_slow_ok(c: Column) -> Column:
     return _url_udf(c)
 
 
 # ---------------------------------------------------------------------------
-# phone — exact via `phonenumbers` when importable (same libphonenumber
-# lineage as the reference crate); else the vendored numbering-plan
-# subset (phone_metadata.py, r4 verdict task #5): full ITU assigned
+# phone — the parity oracle for sql_builders.PHONE_RE: the vendored
+# numbering-plan subset (phone_metadata.py): full ITU assigned
 # calling-code set + generalDesc-level lengths/leading-digit patterns
 # for ~28 high-traffic codes, matching the reference truth table
 # (phone.rs tests: '+14152370800' true, '14152370800' false,
@@ -137,7 +109,7 @@ def url_slow_ok(c: Column) -> Column:
 # bare E.164 shape check could not (+1 1xx…, +1 exchange 1xx, +999).
 # REMAINING BOUNDARY (strict-xfail test_phone_per_range_boundary):
 # per-range assignments (e.g. unassigned NANP area code 999) need full
-# libphonenumber metadata; the seam below switches automatically.
+# libphonenumber metadata, which is not vendored.
 # ---------------------------------------------------------------------------
 
 from . import phone_metadata as _phone_plan
@@ -147,39 +119,17 @@ _E164 = re.compile(r"^\+[0-9]{8,15}$")
 
 
 def _is_phone(v: str) -> bool:
-    if _phonenumbers is not None:
-        try:
-            return _phonenumbers.is_valid_number(
-                _phonenumbers.parse(v, None))
-        except Exception:  # noqa: BLE001
-            return False
     stripped = _PHONE_STRIP.sub("", v)
     if not _E164.match(stripped):
         return False
     return _phone_plan.plan_valid(stripped[1:])
 
 
-@pandas_udf(BooleanType())
-def _phone_udf(s: pd.Series) -> pd.Series:
-    return _apply_bool(s, _is_phone)
-
-
-def phone_ok(c: Column) -> Column:
-    """Two-tier like email/url: a cheap codegen shape gate feeds the
-    Arrow UDF NULL for rows that can never validate. With no default
-    region, both backends require an explicit '+' country prefix —
-    phonenumbers.parse(v, None) raises INVALID_COUNTRY_CODE without one
-    (RFC3966 'phone-context=+CC' forms also contain '+'), and the E.164
-    fallback regex is anchored on '+' — so rows without '+' are decided
-    false in-scan and skip the Arrow hop entirely."""
-    return F.coalesce(_phone_udf(F.when(c.contains("+"), c)),
-                      F.lit(False))
-
-
 # ---------------------------------------------------------------------------
-# email slow path — IDN domains (punycode retry, email.rs:46-52) and
-# ipv6-literal domains. Receives NULL for rows the SQL fast path already
-# decided (two-tier dispatch), so batches are cheap.
+# email slow path — IDN domains (punycode retry, email.rs:46-52). The
+# SQL fast path decides every ASCII domain, ip literals included, and
+# feeds this UDF NULL for those rows (two-tier dispatch); the literal
+# branch keeps the full-Python iter check below exact.
 # ---------------------------------------------------------------------------
 
 _DOMAIN_RE = re.compile(
@@ -267,22 +217,7 @@ def _email_full(v: str) -> bool:
     return _email_domain_slow(v)
 
 
-def _is_ipv4_py(v: str) -> bool:
-    try:
-        ipaddress.IPv4Address(v)
-        return True
-    except ValueError:
-        return False
-
-
-_ITER_CHECKS = {
-    "email": _email_full,
-    "url": _is_url,
-    "phone": _is_phone,
-    "ipv4": _is_ipv4_py,
-    "ipv6": _is_ipv6,
-    "ip_any": _is_ip_any,
-}
+_ITER_CHECKS = {"email": _email_full, "url": _is_url}
 
 _ITER_UDF_CACHE: dict = {}
 
