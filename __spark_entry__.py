@@ -261,9 +261,10 @@ def q_must_match(spark, sf_dir):
 
 
 def q_time_ops(spark, sf_dir):
-    # 2-row-group orders parquet = 2 scan tasks; the weight-4 time-rule
-    # predicates are the expensive stage — shuffle the 2 needed
-    # columns, evaluate on every core
+    # 2-row-group orders parquet = 2 scan tasks; the time-rule
+    # predicates (parse, overflow and format branches) are the
+    # expensive stage — shuffle the 2 needed columns, evaluate on
+    # every core
     t = (_load(spark, sf_dir, "orders")["orders"]
          .select("o_orderkey", "o_orderdate")
          .repartition(spark.sparkContext.defaultParallelism))

@@ -1,6 +1,7 @@
 """Round-4 regression tests: Janino codegen-overflow fix (the r3
-headline defect), chunked phase-2 equivalence, storage-backed
-duplicate_clusters, and the merged driver-window queries."""
+headline defect), barrier phase-2 equivalence with the fused path,
+storage-backed duplicate_clusters, and the merged driver-window
+queries."""
 
 import glob
 import os
@@ -14,7 +15,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(
 
 import __spark_entry__ as E  # noqa: E402
 import validify_spark as vs  # noqa: E402
-from validify_spark import engine as eng_mod  # noqa: E402
 
 
 def _codegen_units(df):
@@ -80,31 +80,23 @@ def _canon(row):
 
 
 def test_chunked_phase2_matches_fused(spark):
-    """Force multi-chunk phase 2 (weight budget below the flagship's
-    total) and assert the violation set is identical to the fused
-    barrier=False path — chunking must never change semantics."""
+    """Barrier phase 2 on the flagship emits exactly the violation set
+    of the fused barrier=False path — the shuffle between the phases
+    must never change semantics."""
     E._load(spark, "/root/testdata/sf0.001", "lineitem")
     turns = spark.sql(E.DERIVE_TURNS_SQL).localCheckpoint(eager=True)
     eng = vs.ValidationEngine(E._turns_ruleset(),
                               key_cols=["conv_id", "turn_idx"],
                               run_ts=E._RUN_TS)
-    rules = eng.ruleset.main_rules
-    old = eng_mod._CHUNK_WEIGHT
-    eng_mod._CHUNK_WEIGHT = 4
-    try:
-        chunks = eng_mod._chunk_by_weight(rules, 4)
-        assert len(chunks) >= 3, "budget 4 must split the flagship"
-        chunked = {_canon(r) for r in eng.violations(turns).collect()}
-    finally:
-        eng_mod._CHUNK_WEIGHT = old
+    barrier = {_canon(r) for r in eng.violations(turns).collect()}
     fused = {_canon(r) for r in
              eng.violations(turns, barrier=False).collect()}
-    assert chunked == fused
+    assert barrier == fused
 
 
 def test_chunking_emits_presence_violations_once(spark):
-    """Presence rules gate every chunk but their own violation rows
-    must appear exactly once across chunks."""
+    """Presence rules gate every main rule but their own violation
+    rows appear exactly once under the barrier."""
     df = spark.createDataFrame(
         [(1, None, "x"), (2, "ok", None), (3, "ok", "y")],
         "id int, a string, b string")
@@ -113,21 +105,15 @@ def test_chunking_emits_presence_violations_once(spark):
         vs.regex("b", "y"), vs.contains("b", "y"),
     ])
     eng = vs.ValidationEngine(rs, key_cols=["id"])
-    old = eng_mod._CHUNK_WEIGHT
-    eng_mod._CHUNK_WEIGHT = 2  # forces >= 2 chunks
-    try:
-        rows = eng.violations(df).collect()
-    finally:
-        eng_mod._CHUNK_WEIGHT = old
+    rows = eng.violations(df).collect()
     required_rows = [r for r in rows if r.code == "required"]
     assert len(required_rows) == 1 and required_rows[0].id == 1
 
 
 def test_chunking_with_presence_schema_and_missing_columns(spark):
-    """The full gating matrix under forced chunking: presence rules
-    gate every chunk, schema rules run in whatever chunk they land in,
-    and a rule naming an absent column emits per-row `required` —
-    all identical to the fused path."""
+    """The full gating matrix under the barrier: presence rules gate
+    the main and schema rules, and a rule naming an absent column
+    emits per-row `required` — all identical to the fused path."""
     df = spark.createDataFrame(
         [(1, "p", "abc", 5), (2, None, "abc", 5), (3, "p", "x", 50)],
         "id int, pay string, s string, n int")
@@ -141,31 +127,24 @@ def test_chunking_with_presence_schema_and_missing_columns(spark):
         vs.length("ghost", min=1),  # absent column -> required
     ]
     eng = vs.ValidationEngine(vs.RuleSet(rules=rules), key_cols=["id"])
-    old = eng_mod._CHUNK_WEIGHT
-    eng_mod._CHUNK_WEIGHT = 2
-    try:
-        assert len(eng_mod._chunk_by_weight(
-            eng.ruleset.main_rules, 2)) >= 3
-        chunked = {_canon(r) for r in eng.violations(df).collect()}
-    finally:
-        eng_mod._CHUNK_WEIGHT = old
+    barrier = {_canon(r) for r in eng.violations(df).collect()}
     fused = {_canon(r) for r in
              eng.violations(df, barrier=False).collect()}
-    assert chunked == fused
+    assert barrier == fused
     # presence-failing row 2 must carry ONLY its presence violation
     # (presence failure suppresses later-stage rules for the row)
-    row2 = [c for c in chunked if c[0] == 2]
+    row2 = [c for c in barrier if c[0] == 2]
     assert len(row2) == 1
-    # id 3: schema rule fired exactly once despite chunking
-    assert sum(1 for c in chunked
+    # id 3: schema rule fired exactly once
+    assert sum(1 for c in barrier
                if c[0] == 3 and "combo" in c) == 1
 
 
 def test_chunked_equivalence_property(spark):
-    """Property test: for RANDOM rule subsets and chunk budgets, the
-    chunked phase-2 emits exactly the fused path's violations. Drawn
-    with hypothesis over a fixed rule pool (presence + scalar + regex +
-    schema + missing-column) so chunk boundaries land everywhere."""
+    """Property test: for RANDOM rule subsets, barrier phase 2 emits
+    exactly the fused path's violations. Drawn with hypothesis over a
+    fixed rule pool (presence + scalar + regex + schema +
+    missing-column)."""
     from hypothesis import given, settings, strategies as st
 
     pool = [
@@ -184,23 +163,17 @@ def test_chunked_equivalence_property(spark):
         "id int, pay string, s string, n int").localCheckpoint()
 
     @settings(max_examples=6, deadline=None)
-    @given(mask=st.lists(st.booleans(), min_size=8, max_size=8),
-           budget=st.integers(min_value=1, max_value=5))
-    def prop(mask, budget):
+    @given(mask=st.lists(st.booleans(), min_size=8, max_size=8))
+    def prop(mask):
         rules = [r for r, keep in zip(pool, mask) if keep]
         if not rules:
             return
         eng = vs.ValidationEngine(vs.RuleSet(rules=list(rules)),
                                   key_cols=["id"])
-        old = eng_mod._CHUNK_WEIGHT
-        eng_mod._CHUNK_WEIGHT = budget
-        try:
-            chunked = {_canon(r) for r in eng.violations(df).collect()}
-        finally:
-            eng_mod._CHUNK_WEIGHT = old
+        barrier = {_canon(r) for r in eng.violations(df).collect()}
         fused = {_canon(r) for r in
                  eng.violations(df, barrier=False).collect()}
-        assert chunked == fused, (mask, budget)
+        assert barrier == fused, mask
 
     prop()
 
