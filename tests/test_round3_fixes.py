@@ -464,6 +464,87 @@ def test_stream_ordering_multi_chunk_group(spark, tmpdir):
                 "spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
 
+def _multi_chunk_case(op):
+    """(batches of (key, idx, text, ts) rows, stateful operator, column
+    names of its output, expected output rows) for one state kernel,
+    each batch a group larger than one 7-row Arrow chunk."""
+    from validify_spark.streaming import (stream_conversation_shape,
+                                          stream_simhash_pairs,
+                                          stream_uniqueness_violations)
+    ts = [f"2024-01-01T00:{i:02d}:00" for i in range(30)]
+    if op == "shape":
+        # alternating roles except 'user' at turn 15 (repeats at 15
+        # and 16); the far-future flush batch moves the watermark past
+        # c1's session gap
+        rows = [("c1", i, "user" if i % 2 == 0 or i == 15 else
+                 "assistant", ts[i]) for i in range(30)]
+        flush = [("zz", 0, "user", "2024-02-01T00:00:00")]
+        return ([rows, flush],
+                lambda s: stream_conversation_shape(
+                    s.withColumnRenamed("text", "role"), alternate=True),
+                ["conv_id", "turn_idx", "code"],
+                [("c1", 15, "role_repeat"), ("c1", 16, "role_repeat")])
+    if op == "uniqueness":
+        rows = [("k", 1, "x", ts[i]) for i in range(20)]
+        return ([rows],
+                lambda s: stream_uniqueness_violations(
+                    s, ["conv_id", "turn_idx"], ts_col="ts"),
+                ["conv_id", "turn_idx", "dup_count"],
+                [("k", 1, n) for n in range(2, 21)])
+    text = "the same near duplicate document text for every id here"
+    rows = [("d", i, text, ts[i]) for i in range(1, 21)]
+    return ([rows],
+            lambda s: stream_simhash_pairs(
+                s.withColumnRenamed("turn_idx", "doc_id"), ts_col="ts"),
+            ["id_a", "id_b", "hamming"],
+            [(a, b, 0) for a in range(1, 21) for b in range(a + 1, 21)])
+
+
+@pytest.mark.parametrize("op", ["shape", "uniqueness", "simhash"])
+def test_stream_kernel_multi_chunk_group(spark, tmpdir, op):
+    """Every state kernel sees a group's Arrow chunks joined: a group
+    of 20-30 shuffled rows split into 7-row chunks gives the output of
+    one whole group (no lost turns, counts or pairs, no false
+    violations at chunk boundaries)."""
+    import time as _time
+
+    batches, operator, cols, want = _multi_chunk_case(op)
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch",
+                         None)
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    try:
+        src = f"{tmpdir}/src"
+        schema = None
+        for rows in batches:
+            rows = list(rows)
+            random.Random(5).shuffle(rows)  # arrival order is arbitrary
+            df = (spark.createDataFrame(
+                      rows, "conv_id string, turn_idx long, text string, "
+                            "ts_s string")
+                  .selectExpr("conv_id", "turn_idx", "text",
+                              "CAST(ts_s AS TIMESTAMP) AS ts"))
+            schema = df.schema
+            df.coalesce(1).write.mode("append").parquet(src)
+            _time.sleep(1.1)  # distinct mtimes => file source batch order
+        stream = (spark.readStream.schema(schema)
+                  .option("maxFilesPerTrigger", 1).parquet(src))
+        name = f"kernel_chunks_{op}"
+        q = (operator(stream)
+             .writeStream.format("memory").queryName(name)
+             .option("checkpointLocation", f"{tmpdir}/ckpt")
+             .outputMode("append").trigger(availableNow=True).start())
+        q.awaitTermination(300)
+        got = [tuple(r[c] for c in cols)
+               for r in spark.sql(f"SELECT * FROM {name}").collect()]
+        assert sorted(got) == sorted(want)
+    finally:
+        if old is None:
+            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+        else:
+            spark.conf.set(
+                "spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+
 # ---------------------------------------------------------------------------
 # model plug-in seams for lang_id / quality_score (pandas_udf, like the
 # phone validator — the documented path to fastText/perplexity models)

@@ -5,10 +5,12 @@ the union; event-time TTL bounds what an arriving doc can match."""
 
 import time as _time
 
+import pytest
 from pyspark.sql import functions as F
 
 from validify_spark.pipeline import simhash_pairs
-from validify_spark.streaming import stream_simhash_pairs
+from validify_spark.streaming import (stream_minhash_pairs,
+                                      stream_simhash_pairs)
 
 _WORDS = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
           "lamda mu nu xi omicron pi rho sigma tau upsilon phi chi "
@@ -194,3 +196,28 @@ def test_within_batch_pairs_no_cross_band_dupes(spark, tmpdir):
     rows = [(r.id_a, r.id_b, r.hamming)
             for r in spark.sql("SELECT * FROM sh_one").collect()]
     assert sorted(rows) == [(1, 2, 0), (1, 3, 0), (2, 3, 0)]
+
+
+@pytest.mark.parametrize("op", [stream_simhash_pairs,
+                                stream_minhash_pairs],
+                         ids=["simhash", "minhash"])
+def test_null_ts_doc_dropped(spark, tmpdir, op):
+    """A doc without an event time has no place on the ttl clock: it
+    is dropped before the state instead of failing the query, and the
+    duplicate pair beside it in the same batch is still emitted."""
+    b1 = [(1, BASE, "2024-01-01T00:00:00"),
+          (2, BASE, "2024-01-01T00:01:00"),
+          (3, BASE, None)]
+    src = f"{tmpdir}/null_ts_src"
+    df = _mk(spark, b1)
+    df.coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema(df.schema).parquet(src)
+    name = f"null_ts_{op.__name__}"
+    q = (op(stream, ts_col="ts")
+         .writeStream.format("memory").queryName(name)
+         .option("checkpointLocation", f"{tmpdir}/{name}_ckpt")
+         .outputMode("append").trigger(availableNow=True).start())
+    q.awaitTermination(300)
+    rows = [(r.id_a, r.id_b) for r in
+            spark.sql(f"SELECT * FROM {name}").collect()]
+    assert rows == [(1, 2)], rows

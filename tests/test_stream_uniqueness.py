@@ -77,3 +77,16 @@ def test_unbounded_mode_without_ts(spark, tmpdir):
     b2 = [("x", 1, "2024-06-01T00:00:00")]  # months later, still a dup
     got = _run(spark, tmpdir, "uq_nowm", [b1, b2])
     assert got == [("x", 1, 2)]
+
+
+def test_null_ts_occurrence_counts_toward_duplicate(spark, tmpdir):
+    """An earlier occurrence without an event time still counts: only
+    a timestamped earlier occurrence can put a row past the ttl."""
+    b1 = [("k", 1, None), ("k", 1, "2024-01-01T00:00:00")]
+    got = _run(spark, tmpdir, "uq_null_ts", [b1],
+               ts_col="ts", ttl="1 hour", watermark="1 hour")
+    assert got == [("k", 1, 2)]
+    batch = [(r.conv_id, r.turn_idx, r.dup_count)
+             for r in uniqueness_violations(
+                 _mk(spark, b1), ["conv_id", "turn_idx"]).collect()]
+    assert batch == got

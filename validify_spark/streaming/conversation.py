@@ -7,7 +7,9 @@ the conversation is complete. On a stream "complete" is an event-time
 session gap — once the watermark passes ``last turn's ts + gap`` with
 no new turn, the conversation is finalized: the same invariants as the
 batch check run over the accumulated turns and the violations are
-emitted (append mode), then the group's state is dropped.
+emitted (append mode), then the group's state is dropped. The turn
+state, timeout and fragmenting are the session-finalize kernel
+(``_util.session_turns``) shared with stream_conversation_rules.
 
 Scale shape: one shuffle (the groupBy(conv_id) every stateful operator
 needs); state per live conversation is just its (turn_idx, ts, role)
@@ -29,11 +31,9 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
-from ._util import dur_ms as _dur_ms
-from ._util import order_turns as _order_turns
-from ._util import split_fragments as _split_fragments
+from ._util import session_turns
 
 
 def _shape_codes(turns: list, zero_based: bool,
@@ -100,69 +100,26 @@ def stream_conversation_shape(stream_df: DataFrame,
         # harsh) cap and must behave like the batch check
         raise ValueError("no shape checks requested")
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     ftypes = {f.name: f.dataType.simpleString()
               for f in stream_df.schema.fields}
-    out_schema = (f"{conv_col} {ftypes[conv_col]}, "
-                  f"{idx_col} {ftypes[idx_col]}, code string")
-    # accumulated turns; parallel arrays keep the state row flat
-    state_schema = ("idxs array<long>, ts_us array<long>, "
-                    "roles array<string>, max_ts_ms long")
-    gap_ms = _dur_ms(session_gap)
 
-    def _finalize(idxs, ts_us, roles):
-        # session-gap split + within-fragment (idx, ts) order are the
-        # shared helpers (_util.split_fragments / order_turns) — same
-        # semantics for every conversation-finalizing operator
+    def finalize(conv, frags):
         rows = []
-        for frag in _split_fragments(idxs, ts_us, gap_ms * 1000):
-            order = _order_turns(frag, idxs, ts_us)
-            turns = [(idxs[k], roles[k]) for k in order]
-            rows.extend(_shape_codes(turns, zero_based, first_role,
-                                     last_role, alternate, max_turns))
-        return rows
+        for idxs, _, roles in frags:
+            rows.extend(_shape_codes(list(zip(idxs, roles)), zero_based,
+                                     first_role, last_role, alternate,
+                                     max_turns))
+        return pd.DataFrame({conv_col: [conv] * len(rows),
+                             idx_col: [i for i, _ in rows],
+                             "code": [c for _, c in rows]})
 
-    def fn(key, pdfs, state):
-        conv = key[0]
-        if state.hasTimedOut:
-            idxs, ts_us, roles, _ = state.get
-            state.remove()
-            rows = _finalize(list(idxs), list(ts_us), list(roles))
-            yield pd.DataFrame({conv_col: [conv] * len(rows),
-                                idx_col: [i for i, _ in rows],
-                                "code": [c for _, c in rows]})
-            return
-        if state.exists:
-            idxs, ts_us, roles, max_ts_ms = state.get
-            idxs, ts_us, roles = list(idxs), list(ts_us), list(roles)
-        else:
-            idxs, ts_us, roles, max_ts_ms = [], [], [], 0
-        frames = [p for p in pdfs if len(p)]
-        if frames:
-            pdf = (pd.concat(frames, ignore_index=True)
-                   if len(frames) > 1 else frames[0])
-            for idx, ts, role in zip(pdf[idx_col], pdf[ts_col],
-                                     pdf[role_col]):
-                has_ts = not pd.isna(ts)
-                idxs.append(None if pd.isna(idx) else int(idx))
-                ts_us.append(int(ts.value // 1000) if has_ts else None)
-                roles.append(None if pd.isna(role) else str(role))
-                if has_ts:
-                    max_ts_ms = max(max_ts_ms, int(ts.value // 10**6))
-        # finalize when the watermark passes last-turn-ts + gap. The
-        # timeout timestamp must sit ABOVE the current watermark, so a
-        # conversation whose gap already elapsed (bulk replay of old
-        # data) finalizes one batch later via a minimal timeout.
-        state.update((idxs, ts_us, roles, max_ts_ms))
-        wm = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(max(max_ts_ms + gap_ms, wm + 1))
-        yield pd.DataFrame({conv_col: [], idx_col: [], "code": []})
-
-    return (stream_df
-            .select(conv_col, idx_col, role_col, ts_col)
-            .withWatermark(ts_col, watermark)
-            .groupBy(conv_col)
-            .applyInPandasWithState(
-                fn, out_schema, state_schema, "append",
-                GroupStateTimeout.EventTimeTimeout))
+    # accumulated turns; parallel arrays keep the state row flat
+    return session_turns(
+        stream_df, conv_col=conv_col, idx_col=idx_col, ts_col=ts_col,
+        fields=[(role_col, str)],
+        state_schema=("idxs array<long>, ts_us array<long>, "
+                      "roles array<string>, max_ts_ms long"),
+        out_schema=(f"{conv_col} {ftypes[conv_col]}, "
+                    f"{idx_col} {ftypes[idx_col]}, code string"),
+        finalize=finalize, watermark=watermark, session_gap=session_gap)

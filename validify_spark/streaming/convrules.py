@@ -6,11 +6,11 @@ struct-level ``schema_validation``, ``derive_tests/tests/schema.rs:
 Whole-conversation rules can only be judged once the conversation is
 complete; on a stream "complete" is an event-time session gap — the
 same finalize semantics as stream_conversation_shape, via the shared
-``_util.split_fragments``: once the watermark passes ``last turn's ts
-+ gap`` with no new turn, the accumulated turns are fragmented on
-event-time gaps, each fragment is handed to every rule as a sorted
-pandas DataFrame, and the failing rule codes are emitted (append
-mode); then the group's state is dropped.
+session-finalize kernel ``_util.session_turns``: once the watermark
+passes ``last turn's ts + gap`` with no new turn, the accumulated
+turns are fragmented on event-time gaps, each fragment is handed to
+every rule as a sorted pandas DataFrame, and the failing rule codes
+are emitted (append mode); then the group's state is dropped.
 
 Two streaming forms, mirroring the batch tiers:
 
@@ -39,9 +39,7 @@ from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-from ._util import dur_ms as _dur_ms
-from ._util import order_turns as _order_turns
-from ._util import split_fragments as _split_fragments
+from ._util import session_turns
 
 # state-array element type + python coercion per Spark simpleString
 # (primitive turn columns only — binary/array/struct payloads belong
@@ -95,15 +93,13 @@ def stream_conversation_rules(stream_df: DataFrame,
             raise ValueError(f"rule {code}: fn must be callable")
 
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     ftypes = {f.name: f.dataType.simpleString()
               for f in stream_df.schema.fields}
     if fields is None:
         fields = [c for c in stream_df.columns
                   if c not in (conv_col, idx_col, ts_col)]
-    fields = list(fields)
-    coerce = {}
+    carried = []
     state_cols = ["idxs array<long>", "ts_us array<long>"]
     for i, c in enumerate(fields):
         t = ftypes[c]
@@ -113,35 +109,21 @@ def stream_conversation_rules(stream_df: DataFrame,
                 f"only; pre-extract what the rule needs)")
         arr_t, py = _FIELD_TYPES[t]
         state_cols.append(f"f{i} array<{arr_t}>")
-        coerce[c] = py
-    state_schema = ", ".join(state_cols + ["max_ts_ms long"])
-    out_schema = (f"`{conv_col}` {ftypes[conv_col]}, "
-                  f"session_start timestamp, code string")
-    gap_ms = _dur_ms(session_gap)
-    rules = pandas_rules
+        carried.append((c, py))
 
-    def _empty_out():
-        return pd.DataFrame({conv_col: [],
-                             "session_start": pd.to_datetime([]),
-                             "code": []})
-
-    def _finalize(conv, idxs, ts_us, fvals):
+    def finalize(conv, frags):
         convs, starts, codes = [], [], []
-        for frag in _split_fragments(idxs, ts_us, gap_ms * 1000):
-            order = _order_turns(frag, idxs, ts_us)
-            data = {idx_col: pd.array([idxs[k] for k in order],
-                                      dtype="Int64"),
+        for idxs, ts_us, *fvals in frags:
+            data = {idx_col: pd.array(idxs, dtype="Int64"),
                     ts_col: pd.to_datetime(
-                        pd.array([ts_us[k] for k in order],
-                                 dtype="Int64"), unit="us")}
-            for c, vals in zip(fields, fvals):
-                data[c] = pd.Series([vals[k] for k in order],
-                                    dtype="object")
+                        pd.array(ts_us, dtype="Int64"), unit="us")}
+            for (c, _), vals in zip(carried, fvals):
+                data[c] = pd.Series(vals, dtype="object")
             pdf = pd.DataFrame(data)
-            frag_ts = [ts_us[k] for k in frag if ts_us[k] is not None]
+            frag_ts = [t for t in ts_us if t is not None]
             start = (pd.Timestamp(min(frag_ts), unit="us")
                      if frag_ts else pd.NaT)
-            for code, fn in rules:
+            for code, fn in pandas_rules:
                 if not fn(pdf):
                     convs.append(conv)
                     starts.append(start)
@@ -149,53 +131,13 @@ def stream_conversation_rules(stream_df: DataFrame,
         return pd.DataFrame({conv_col: convs, "session_start": starts,
                              "code": codes})
 
-    def fn(key, pdfs, state):
-        conv = key[0]
-        if state.hasTimedOut:
-            vals = state.get
-            state.remove()
-            idxs, ts_us = list(vals[0]), list(vals[1])
-            fvals = [list(v) for v in vals[2:-1]]
-            yield _finalize(conv, idxs, ts_us, fvals)
-            return
-        if state.exists:
-            vals = state.get
-            idxs, ts_us = list(vals[0]), list(vals[1])
-            fvals = [list(v) for v in vals[2:-1]]
-            max_ts_ms = vals[-1]
-        else:
-            idxs, ts_us = [], []
-            fvals = [[] for _ in fields]
-            max_ts_ms = 0
-        frames = [p for p in pdfs if len(p)]
-        if frames:
-            pdf = (pd.concat(frames, ignore_index=True)
-                   if len(frames) > 1 else frames[0])
-            # column-wise extraction: no per-row dicts, and immune to
-            # itertuples' silent renaming of non-identifier columns
-            idxs += [None if pd.isna(v) else int(v)
-                     for v in pdf[idx_col]]
-            new_us = [None if pd.isna(v) else int(v.value // 1000)
-                      for v in pdf[ts_col]]
-            ts_us += new_us
-            for c, acc in zip(fields, fvals):
-                py = coerce[c]
-                acc += [None if pd.isna(v) else py(v) for v in pdf[c]]
-            got_ms = [u // 1000 for u in new_us if u is not None]
-            if got_ms:
-                max_ts_ms = max(max_ts_ms, max(got_ms))
-        state.update(tuple([idxs, ts_us] + fvals + [max_ts_ms]))
-        wm = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(max(max_ts_ms + gap_ms, wm + 1))
-        yield _empty_out()
-
-    return (stream_df
-            .select(conv_col, idx_col, ts_col, *fields)
-            .withWatermark(ts_col, watermark)
-            .groupBy(conv_col)
-            .applyInPandasWithState(
-                fn, out_schema, state_schema, "append",
-                GroupStateTimeout.EventTimeTimeout))
+    return session_turns(
+        stream_df, conv_col=conv_col, idx_col=idx_col, ts_col=ts_col,
+        fields=carried,
+        state_schema=", ".join(state_cols + ["max_ts_ms long"]),
+        out_schema=(f"`{conv_col}` {ftypes[conv_col]}, "
+                    f"session_start timestamp, code string"),
+        finalize=finalize, watermark=watermark, session_gap=session_gap)
 
 
 def stream_conversation_rules_agg(stream_df: DataFrame,

@@ -20,12 +20,12 @@ in state); with num_perm=16 the estimate's stderr is ~0.12, so treat
 matters (`pipeline/dedup.py minhash_lsh_pairs` exact-verifies the same
 candidates in batch).
 
-State / ttl / retention / suppression semantics are copied from
-stream_simhash_pairs: ttl is enforced against each arriving doc's own
-event time, physical retention is ttl + watermark behind each bucket's
-local clock, and a pair agreeing on several bands is emitted only by
-its lowest matching band — sound for the same retention reason
-(`streaming/simhash.py` docstring).
+State, ttl window, re-delivery, pair emission and retention prune are
+the banded near-dup kernel (``_util.banded_pairs``) that
+stream_simhash_pairs also runs on: ttl is enforced against each
+arriving doc's own event time, physical retention is ttl + watermark
+behind each bucket's local clock, and a pair agreeing on several bands
+is emitted only by its lowest matching band.
 """
 
 from __future__ import annotations
@@ -35,7 +35,7 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..pipeline.text import word_shingles_expr
-from ._util import dur_us as _dur_us
+from ._util import banded_pairs
 
 _SIG_SEP = "|"
 
@@ -80,115 +80,45 @@ def stream_minhash_pairs(stream_df: DataFrame,
     signature-position agreement fraction, filtered to ``>= min_est``.
     The pair set with min_est=0 equals the batch op's banded candidate
     set over the same docs (tested). ``id_col`` must be integral
-    (packed state), first sight wins on re-delivered ids — both
-    contracts shared with stream_simhash_pairs."""
+    (packed state), first sight wins on re-delivered ids and rows with
+    a NULL ``ts_col`` are dropped — contracts shared with
+    stream_simhash_pairs."""
     if num_perm % bands:
         raise ValueError(f"bands={bands} must divide num_perm={num_perm}")
     rows = num_perm // bands
-    id_type = dict(stream_df.dtypes).get(id_col)
-    if id_type not in ("tinyint", "smallint", "int", "bigint"):
-        raise ValueError(
-            f"{id_col!r} must be an integral column for the packed "
-            f"signature state (got {id_type}); hash or dictionary-"
-            "encode string ids upstream")
 
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    def project(docs):
+        sig = (docs.select("__id", "__ts_us", *minhash_signature_expr(
+                   F.col(text_col), n, num_perm))
+               .filter(F.col("h0").isNotNull()))
+        h = [F.col(f"h{i}") for i in range(num_perm)]
+        # the full signature rides along as ONE delimited string — the
+        # verify step needs every position for the agreement estimate
+        return sig.select(
+            "__id", "__ts_us", F.concat_ws(_SIG_SEP, *h).alias("__fp"),
+            F.array(*[F.md5(F.concat_ws(_SIG_SEP,
+                                        *h[b * rows:(b + 1) * rows]))
+                      for b in range(bands)]).alias("__buckets"))
 
-    ttl_us = retain_us = None
-    if ts_col is not None and ttl is not None:
-        ttl_us = _dur_us(ttl)
-        retain_us = ttl_us + _dur_us(watermark)
+    def match(sig, band, others):
+        cur = sig.split(_SIG_SEP)
+        for j, osig in enumerate(others):
+            other = osig.split(_SIG_SEP)
+            est = sum(a == b for a, b in zip(cur, other)) / num_perm
+            if est < min_est:
+                continue
+            # must actually collide on THIS band (bucket md5 collisions
+            # across different band values are negligible but band
+            # agreement is re-checked cheaply), and on no LOWER band
+            # (suppression)
+            first = next((k for k in range(bands)
+                          if cur[k * rows:(k + 1) * rows]
+                          == other[k * rows:(k + 1) * rows]), None)
+            if first == band:
+                yield j, round(est, 6)
 
-    src = stream_df
-    if ts_col is not None:
-        src = src.withWatermark(ts_col, watermark)
-
-    sig_cols = minhash_signature_expr(F.col(text_col), n, num_perm)
-    ts_expr = ((F.col(ts_col).cast("double") * 1_000_000).cast("long")
-               if ts_col is not None else F.lit(0).cast("long"))
-    sig = (src.select(F.col(id_col).alias("__id"),
-                      ts_expr.alias("__ts_us"), *sig_cols)
-           .filter(F.col("h0").isNotNull()))
-    band_buckets = F.array(*[
-        F.md5(F.concat_ws(
-            _SIG_SEP, *[F.col(f"h{b * rows + r}") for r in range(rows)]))
-        for b in range(bands)])
-    # the full signature rides along as ONE delimited string — the
-    # verify step needs every position for the agreement estimate
-    fb = sig.select(
-        "__id", "__ts_us",
-        F.concat_ws(_SIG_SEP,
-                    *[F.col(f"h{i}") for i in range(num_perm)])
-        .alias("__sig"),
-        F.posexplode(band_buckets).alias("__band", "__bucket"))
-
-    out_schema = "id_a long, id_b long, est_jaccard double"
-    state_schema = "ids array<long>, sigs array<string>, tss array<long>"
-
-    def fn(key, pdfs, state):
-        band = int(key[0])
-        if state.exists:
-            s_ids, s_sigs, s_tss = state.get
-            ids, sigs, tss = list(s_ids), list(s_sigs), list(s_tss)
-        else:
-            ids, sigs, tss = [], [], []
-
-        frames = [p for p in pdfs if len(p)]
-        out_a, out_b, out_e = [], [], []
-        if frames:
-            pdf = (pd.concat(frames, ignore_index=True)
-                   if len(frames) > 1 else frames[0])
-            pdf = pdf.sort_values(["__ts_us", "__id"], kind="stable")
-            known = set(ids)
-            for did, sg, ts_us in zip(pdf["__id"], pdf["__sig"],
-                                      pdf["__ts_us"]):
-                did, sg, ts_us = int(did), str(sg), int(ts_us)
-                if did in known:
-                    continue  # first sight wins (at-least-once source)
-                cur = sg.split(_SIG_SEP)
-                for i, (oid, osig, ots) in enumerate(
-                        zip(ids, sigs, tss)):
-                    if ttl_us is not None and ots < ts_us - ttl_us:
-                        continue
-                    other = osig.split(_SIG_SEP)
-                    est = sum(a == b for a, b in zip(cur, other)) \
-                        / num_perm
-                    if est < min_est:
-                        continue
-                    # must actually collide on THIS band (bucket md5
-                    # collisions across different band values are
-                    # negligible but band agreement is re-checked
-                    # cheaply), and on no LOWER band (suppression)
-                    first = next(
-                        (k for k in range(bands)
-                         if cur[k * rows:(k + 1) * rows]
-                         == other[k * rows:(k + 1) * rows]), None)
-                    if first != band:
-                        continue
-                    a, b = sorted((oid, did))
-                    out_a.append(a)
-                    out_b.append(b)
-                    out_e.append(round(est, 6))
-                ids.append(did)
-                sigs.append(sg)
-                tss.append(ts_us)
-                known.add(did)
-            if retain_us is not None and tss:
-                cutoff = max(tss) - retain_us
-                keep = [i for i, t in enumerate(tss) if t >= cutoff]
-                if len(keep) < len(ids):
-                    ids = [ids[i] for i in keep]
-                    sigs = [sigs[i] for i in keep]
-                    tss = [tss[i] for i in keep]
-        state.update((ids, sigs, tss))
-        yield pd.DataFrame({"id_a": out_a, "id_b": out_b,
-                            "est_jaccard": out_e})
-
-    # NoTimeout + per-batch retention prune: the same state contract
-    # as stream_simhash_pairs (state bounded per ACTIVE bucket; an
-    # idle bucket holds at most one retention window of entries)
-    return (fb.groupBy("__band", "__bucket")
-            .applyInPandasWithState(
-                fn, out_schema, state_schema, "append",
-                GroupStateTimeout.NoTimeout))
+    return banded_pairs(
+        stream_df, id_col=id_col, ts_col=ts_col, ttl=ttl,
+        watermark=watermark, project=project, match=match,
+        state_schema="ids array<long>, sigs array<string>, tss array<long>",
+        value="est_jaccard double")

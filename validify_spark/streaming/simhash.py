@@ -17,7 +17,9 @@ groups, each holding only fingerprints (24 bytes/doc) seen within
 (the match window itself is ``ttl``); candidate
 verification is a vectorized numpy xor+popcount against just the
 bucket's members. No shuffle beyond the groupBy(band, bucket) that any
-stateful operator needs.
+stateful operator needs. The state, ttl window, re-delivery, pair
+emission and retention prune are the banded near-dup kernel
+(``_util.banded_pairs``) shared with stream_minhash_pairs.
 """
 
 from __future__ import annotations
@@ -27,10 +29,12 @@ from typing import Optional
 from pyspark.sql import DataFrame, functions as F
 
 from ..pipeline.dedup import simhash_udf
+from ._util import banded_pairs
 
 _N_BANDS = 4
 _BAND_BITS = 16
 _BAND_MASK = (1 << _BAND_BITS) - 1
+_FP_MASK = (1 << 64) - 1
 
 
 def stream_simhash_pairs(stream_df: DataFrame,
@@ -59,8 +63,9 @@ def stream_simhash_pairs(stream_df: DataFrame,
     not another), so an entry must survive in EVERY band's bucket for
     as long as an in-watermark arrival could still pair with it —
     otherwise a pair could be pruned from its lowest matching band yet
-    suppressed in a higher one. Without ``ts_col`` state grows with
-    distinct fingerprints (tests/small streams only).
+    suppressed in a higher one. Rows with a NULL ``ts_col`` are
+    dropped: they have no place on the ttl clock. Without ``ts_col``
+    state grows with distinct fingerprints (tests/small streams only).
 
     ``id_col`` must be integral (the 24-byte/doc state packs ids as
     longs); re-delivered ids (at-least-once sources) are ignored after
@@ -72,9 +77,7 @@ def stream_simhash_pairs(stream_df: DataFrame,
     Output (append mode): id_a, id_b (id_a < id_b), hamming — the
     batch ``simhash_pairs`` schema, so a stream over the same docs
     yields the same pair set (tested)."""
-    import pandas as pd
     import numpy as np
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     if max_hamming > _N_BANDS - 1:
         # pigeonhole recall guarantee: d <= bands-1 collides on >= 1
@@ -84,129 +87,32 @@ def stream_simhash_pairs(stream_df: DataFrame,
             f"max_hamming={max_hamming} exceeds the {_N_BANDS}-band "
             f"recall guarantee (<= {_N_BANDS - 1}); raise the band "
             "count, not the threshold")
-    id_type = dict(stream_df.dtypes).get(id_col)
-    if id_type not in ("tinyint", "smallint", "int", "bigint"):
-        raise ValueError(
-            f"{id_col!r} must be an integral column for the packed "
-            f"fingerprint state (got {id_type}); hash or dictionary-"
-            "encode string ids upstream")
 
-    from ._util import dur_us as _dur_us
+    def project(rows):
+        fp = (rows.select("__id", "__ts_us",
+                          simhash_udf()(F.col(text_col)).alias("__fp"))
+              .filter(F.col("__fp").isNotNull()))
+        return fp.select("*", F.array(*[
+            F.shiftrightunsigned(F.col("__fp"), _BAND_BITS * b)
+             .bitwiseAND(F.lit(_BAND_MASK))
+            for b in range(_N_BANDS)]).alias("__buckets"))
 
-    ttl_us = None
-    retain_us = None
-    if ts_col is not None and ttl is not None:
-        ttl_us = _dur_us(ttl)
-        retain_us = ttl_us + _dur_us(watermark)
+    def match(fp, band, others):
+        if not others:
+            return
+        x = np.array(others, dtype=np.int64).view(np.uint64) \
+            ^ np.uint64(fp & _FP_MASK)
+        ham = np.unpackbits(x.view(np.uint8)).reshape(-1, 64).sum(axis=1)
+        for j in np.nonzero(ham <= max_hamming)[0]:
+            # lowest-matching-band suppression: emit only if no band
+            # below this one also agrees (pigeonhole: one always does)
+            diff = (fp ^ others[j]) & _FP_MASK
+            if next(k for k in range(_N_BANDS)
+                    if not (diff >> (_BAND_BITS * k)) & _BAND_MASK) == band:
+                yield j, int(ham[j])
 
-    src = stream_df
-    if ts_col is not None:
-        src = src.withWatermark(ts_col, watermark)
-
-    bands = F.array(*[
-        F.shiftrightunsigned(F.col("simhash"), _BAND_BITS * b)
-         .bitwiseAND(F.lit(_BAND_MASK))
-        for b in range(_N_BANDS)
-    ])
-    cols = [F.col(id_col).alias("__id"),
-            simhash_udf()(F.col(text_col)).alias("simhash")]
-    if ts_col is not None:
-        cols.append((F.col(ts_col).cast("double") * 1_000_000)
-                    .cast("long").alias("__ts_us"))
-    else:
-        cols.append(F.lit(0).cast("long").alias("__ts_us"))
-    fb = (src.select(*cols)
-          .filter(F.col("simhash").isNotNull())
-          .select("__id", "simhash", "__ts_us",
-                  F.posexplode(bands).alias("__band", "__bucket")))
-
-    out_schema = "id_a long, id_b long, hamming int"
-    state_schema = "ids array<long>, fps array<long>, tss array<long>"
-
-    def _band_vals(fp_u64: np.ndarray, k: int) -> np.ndarray:
-        return (fp_u64 >> np.uint64(_BAND_BITS * k)) \
-            & np.uint64(_BAND_MASK)
-
-    def fn(key, pdfs, state):
-        band = int(key[0])
-        if state.exists:
-            s_ids, s_fps, s_tss = state.get
-            ids = list(s_ids)
-            fps = list(s_fps)
-            tss = list(s_tss)
-        else:
-            ids, fps, tss = [], [], []
-
-        frames = [p for p in pdfs if len(p)]
-        out_a, out_b, out_h = [], [], []
-        if frames:
-            pdf = (pd.concat(frames, ignore_index=True)
-                   if len(frames) > 1 else frames[0])
-            # deterministic arrival order within the batch
-            pdf = pdf.sort_values(["__ts_us", "__id"], kind="stable")
-            known = set(ids)
-            for did, fp, ts_us in zip(pdf["__id"], pdf["simhash"],
-                                      pdf["__ts_us"]):
-                did, fp, ts_us = int(did), int(fp), int(ts_us)
-                if did in known:
-                    # at-least-once re-delivery: first sight wins (a
-                    # second state entry would double-emit every later
-                    # pair involving this id)
-                    continue
-                if fps:
-                    prev = np.array(fps, dtype=np.int64) \
-                        .view(np.uint64)
-                    cur = np.uint64(fp & (2**64 - 1))
-                    x = prev ^ cur
-                    ham = np.unpackbits(
-                        x.view(np.uint8)).reshape(-1, 8 * 8).sum(axis=1)
-                    ok = ham <= max_hamming
-                    if ttl_us is not None:
-                        # an entry older than ttl RELATIVE TO THIS DOC
-                        # must not match, even if the batch-end prune
-                        # hasn't dropped it yet
-                        ok &= (np.array(tss, dtype=np.int64)
-                               >= ts_us - ttl_us)
-                    hit = np.nonzero(ok)[0]
-                    if len(hit):
-                        # lowest-matching-band suppression: emit only
-                        # if no band < this one also matches (sound
-                        # because retention = ttl + watermark keeps the
-                        # partner alive in EVERY matching band for any
-                        # in-watermark arrival — see docstring)
-                        for i in hit:
-                            pfp = np.uint64(fps[i] & (2**64 - 1))
-                            first = next(
-                                k for k in range(_N_BANDS)
-                                if _band_vals(np.array([pfp]), k)[0]
-                                == _band_vals(np.array([cur]), k)[0])
-                            if first != band:
-                                continue
-                            a, b = sorted((ids[i], did))
-                            out_a.append(a)
-                            out_b.append(b)
-                            out_h.append(int(ham[i]))
-                ids.append(did)
-                fps.append(fp)
-                tss.append(ts_us)
-                known.add(did)
-            if retain_us is not None and tss:
-                # physical retention = ttl + watermark behind THIS
-                # bucket's local clock (match window stays ttl via the
-                # per-row mask above): retention must outlast any
-                # in-watermark arrival that could still pair with an
-                # entry, or bucket-local pruning would break the
-                # lowest-band suppression invariant
-                cutoff = max(tss) - retain_us
-                keep = [i for i, t in enumerate(tss) if t >= cutoff]
-                ids = [ids[i] for i in keep]
-                fps = [fps[i] for i in keep]
-                tss = [tss[i] for i in keep]
-        state.update((ids, fps, tss))
-        yield pd.DataFrame({"id_a": out_a, "id_b": out_b,
-                            "hamming": out_h})
-
-    return (fb.groupBy("__band", "__bucket")
-            .applyInPandasWithState(
-                fn, out_schema, state_schema, "append",
-                GroupStateTimeout.NoTimeout))
+    return banded_pairs(
+        stream_df, id_col=id_col, ts_col=ts_col, ttl=ttl,
+        watermark=watermark, project=project, match=match,
+        state_schema="ids array<long>, fps array<long>, tss array<long>",
+        value="hamming int")

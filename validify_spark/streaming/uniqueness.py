@@ -28,7 +28,10 @@ from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame
 
-from ._util import dur_ms as _dur_ms
+from ._util import batch_frame, dur_ms, expire_after
+
+# max_ts_ms of a key with no timestamped occurrence yet
+_NO_TS = -2**62
 
 
 def stream_uniqueness_violations(stream_df: DataFrame,
@@ -53,28 +56,27 @@ def stream_uniqueness_violations(stream_df: DataFrame,
     out_schema = ", ".join(f"{k} {ftypes[k]}" for k in keys) \
         + ", dup_count long"
     state_schema = "n_seen long, max_ts_ms long"
-    ttl_ms = _dur_ms(ttl)
+    ttl_ms = dur_ms(ttl)
     use_ts = ts_col is not None
 
     src = stream_df.select(*keys, *([ts_col] if use_ts else []))
     if use_ts:
         src = src.withWatermark(ts_col, watermark)
 
+    def empty():
+        return pd.DataFrame({**{k: [] for k in keys}, "dup_count": []})
+
     def fn(key, pdfs, state):
         import numpy as np
         if state.hasTimedOut:
             state.remove()
-            yield pd.DataFrame({**{k: [] for k in keys},
-                                "dup_count": []})
+            yield empty()
             return
-        n_seen, max_ts_ms = state.get if state.exists else (0, 0)
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            yield pd.DataFrame({**{k: [] for k in keys},
-                                "dup_count": []})
+        n_seen, max_ts_ms = state.get if state.exists else (0, _NO_TS)
+        pdf = batch_frame(pdfs)
+        if pdf is None:
+            yield empty()
             return
-        pdf = (pd.concat(frames, ignore_index=True)
-               if len(frames) > 1 else frames[0])
         if use_ts:
             # The ttl is enforced against EVENT time here, not only
             # via the state timeout: the watermark (which drives
@@ -82,18 +84,17 @@ def stream_uniqueness_violations(stream_df: DataFrame,
             # "fresh" key can meet state that should already have
             # expired. Sorting by ts makes the running max == the
             # previous value, so expiry points are where the sorted
-            # gap exceeds ttl (NULL ts sorts first and never expires
-            # anything).
+            # gap exceeds ttl. NULL ts sorts first and never expires
+            # anything, and only a timestamped earlier occurrence can
+            # expire a row (NULL-ts occurrences keep counting).
             pdf = pdf.sort_values(ts_col, na_position="first",
                                   kind="stable")
             ts_ns = pdf[ts_col].values.astype("int64", copy=False)
             valid = ~pdf[ts_col].isna().to_numpy()
-            ts_ms = np.where(valid, ts_ns // 10**6, np.int64(-2**62))
-            prev = np.concatenate(
-                ([max_ts_ms if n_seen > 0 else -2**62], ts_ms[:-1]))
-            # a NULL-ts prev never expires the next row
-            prev = np.maximum.accumulate(prev)
-            resets = valid & (ts_ms > prev + ttl_ms)
+            ts_ms = np.where(valid, ts_ns // 10**6, np.int64(_NO_TS))
+            prev = np.maximum.accumulate(
+                np.concatenate(([max_ts_ms], ts_ms[:-1])))
+            resets = valid & (prev != _NO_TS) & (ts_ms > prev + ttl_ms)
             seg = np.cumsum(resets)
             # position within the current segment
             seg_start = np.zeros(len(pdf), dtype=np.int64)
@@ -111,8 +112,7 @@ def stream_uniqueness_violations(stream_df: DataFrame,
         dup_counts = [int(c) for c in counts if c >= 2]
         state.update((n_seen, max_ts_ms))
         if use_ts:
-            wm = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(max(max_ts_ms + ttl_ms, wm + 1))
+            expire_after(state, max_ts_ms, ttl_ms)
         yield pd.DataFrame({**{k: [key[i]] * len(dup_counts)
                                for i, k in enumerate(keys)},
                             "dup_count": dup_counts})

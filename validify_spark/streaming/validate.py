@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..engine import ValidationEngine
+from ._util import batch_frame
 
 
 def stream_violations(engine: ValidationEngine,
@@ -69,16 +70,12 @@ def stream_ordering_violations(stream_df: DataFrame,
             idxs.append(i)
             codes.append(code)
 
-        # applyInPandasWithState splits one group into multiple Arrow
-        # chunks (spark.sql.execution.arrow.maxRecordsPerBatch rows
-        # each); sorting per-chunk would compare rows across unsorted
-        # chunk boundaries, so concatenate the whole group's batch
-        # first and sort ONCE — this is what keeps a single-batch run
-        # bit-identical to the batch ordering check
-        frames = [p for p in pdfs if len(p)]
-        if frames:
-            pdf = (pd.concat(frames, ignore_index=True)
-                   if len(frames) > 1 else frames[0])
+        # sorting per Arrow chunk would compare rows across unsorted
+        # chunk boundaries, so join the group's chunks first and sort
+        # ONCE — this is what keeps a single-batch run bit-identical
+        # to the batch ordering check
+        pdf = batch_frame(pdfs)
+        if pdf is not None:
             pdf = pdf.sort_values([idx_col, ts_col],
                                   na_position="first", kind="stable")
             for idx, ts in zip(pdf[idx_col], pdf[ts_col]):
