@@ -1293,14 +1293,14 @@ def q_stats_profile_sketch(spark, sf_dir):
 
 
 def q_stats_tdigest(spark, sf_dir):
-    """Distributed t-digest quantiles (the north_star's named sketch;
-    checks/tdigest.py) — approximate by design, rows-only check; the
-    <1% rank-error bound is pytest-gated (tests/test_tdigest.py)."""
+    """Distributed quantiles under the north_star's named sketch
+    (checks/tdigest.py: one GK ``percentile_approx`` aggregate) —
+    approximate by design, rows-only check; the rank-error bounds are
+    pytest-gated (tests/test_tdigest.py)."""
     from validify_spark.checks import tdigest_quantiles
     t = _load(spark, sf_dir, "events")["events"]
     q = tdigest_quantiles(t, "value",
-                          probs=[0.1, 0.25, 0.5, 0.75, 0.9, 0.99],
-                          fanout=4)
+                          probs=[0.1, 0.25, 0.5, 0.75, 0.9, 0.99])
     return spark.createDataFrame(
         [(float(p), float(v)) for p, v in sorted(q.items())],
         "prob double, value double")

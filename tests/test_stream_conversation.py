@@ -4,10 +4,12 @@ the SAME violation rows as the batch check on the same turns."""
 
 import time as _time
 
+import pytest
 from pyspark.sql import functions as F
 
 from validify_spark.checks import conversation_shape_violations
-from validify_spark.streaming import stream_conversation_shape
+from validify_spark.streaming import (stream_conversation_rules,
+                                      stream_conversation_shape)
 
 DDL = "conv_id string, turn_idx long, role string, ts_s string"
 
@@ -101,8 +103,57 @@ def test_gap_splits_one_conv_into_fragments(spark, tmpdir):
                    for _, _, code in got)
 
 
+def _run_per_file(spark, tmpdir, name, batches, build):
+    """One availableNow query per file on a shared checkpoint. Each
+    query ends with the no-data batch that fires the timeouts its
+    watermark passed; a single query over all files skips those
+    between files (``_run_stream``)."""
+    src_dir, rows = f"{tmpdir}/{name}_src", []
+    for b in batches:
+        df = _mk(spark, b)
+        df.coalesce(1).write.mode("append").parquet(src_dir)
+        q = (build(spark.readStream.schema(df.schema).parquet(src_dir))
+             .writeStream
+             .foreachBatch(lambda out, _: rows.extend(out.collect()))
+             .option("checkpointLocation", f"{tmpdir}/{name}_ckpt")
+             .outputMode("append").trigger(availableNow=True).start())
+        q.awaitTermination(300)
+    return rows
+
+
+_STREAM_KW = dict(ts_col="ts", watermark="10 minutes",
+                  session_gap="30 minutes")
+_NULL_TS_CASES = {
+    "shape": (lambda s: stream_conversation_shape(s, **_STREAM_KW, **KW),
+              lambda r: (r.conv_id, r.turn_idx, r.code),
+              {("c6", 0, "first_role")}),
+    "convrules": (lambda s: stream_conversation_rules(
+        s, [("first_user", lambda p: p["role"].iloc[0] == "user"),
+            ("ends_assistant",
+             lambda p: p["role"].iloc[-1] == "assistant")],
+        **_STREAM_KW),
+        lambda r: (r.conv_id, r.code), {("c6", "first_user")}),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_NULL_TS_CASES))
+def test_null_ts_head_waits_for_later_turns(spark, tmpdir, kind):
+    """c5's first turn has a NULL ts. Its timeout must not finalize it
+    before turn 1 (timestamped, next file) arrives, even though c1
+    moves the watermark in between. c6 has only NULL-ts turns and
+    still finalizes once the watermark passes."""
+    build, key, expected = _NULL_TS_CASES[kind]
+    f1 = [("c1", 0, "user", "2024-01-01T00:00:00"),
+          ("c1", 1, "assistant", "2024-01-01T00:00:10"),
+          ("c5", 0, "user", None),
+          ("c6", 0, "assistant", None)]
+    f2 = [("c5", 1, "assistant", "2024-01-01T00:02:30")]
+    rows = _run_per_file(spark, tmpdir, f"null_ts_{kind}",
+                         [f1, f2, FLUSH], build)
+    assert {key(r) for r in rows} == expected
+
+
 def test_no_checks_requested_raises(spark):
-    import pytest
     with pytest.raises(ValueError, match="no shape checks"):
         stream_conversation_shape(
             _mk(spark, [("c", 0, "user", "2024-01-01T00:00:00")]),

@@ -1,6 +1,7 @@
-"""t-digest distributed quantiles: rank-error bound against exact
-quantiles on uniform and heavily skewed data, fanout (tree-merge)
-equivalence, and exact tails."""
+"""Distributed quantiles (tdigest_quantiles, a GK percentile_approx
+aggregate): rank-error bound against exact quantiles on uniform and
+heavily skewed data, exact tails, NULL/NaN exclusion, prob range, and
+no Python worker."""
 
 import numpy as np
 import pytest
@@ -31,7 +32,7 @@ def test_rank_error_bound_uniform(spark):
           .select(((F.abs(F.xxhash64("id")) % 1_000_000) / 1000.0)
                   .alias("v")))
     vals = np.array([r.v for r in df.collect()])
-    q = tdigest_quantiles(df, "v", probs=PROBS, compression=100)
+    q = tdigest_quantiles(df, "v", probs=PROBS)
     for p in PROBS:
         err = _rank_error(vals, q[p], p)
         bound = 0.01 if 0.1 <= p <= 0.9 else 0.005  # k1: tighter tails
@@ -40,22 +41,10 @@ def test_rank_error_bound_uniform(spark):
 
 def test_rank_error_bound_skewed(spark, skewed):
     vals = np.array([r.v for r in skewed.collect()])
-    q = tdigest_quantiles(skewed, "v", probs=PROBS, compression=100)
+    q = tdigest_quantiles(skewed, "v", probs=PROBS)
     for p in PROBS:
         err = _rank_error(vals, q[p], p)
         assert err < 0.01, (p, q[p], err)
-
-
-def test_fanout_tree_merge_close(spark, skewed):
-    """The intermediate applyInPandas merge level must stay within the
-    same rank-error envelope as the flat driver merge (each merge pass
-    is itself a valid digest)."""
-    vals = np.array([r.v for r in skewed.collect()])
-    flat = tdigest_quantiles(skewed, "v", probs=PROBS)
-    tree = tdigest_quantiles(skewed, "v", probs=PROBS, fanout=4)
-    for p in PROBS:
-        assert _rank_error(vals, tree[p], p) < 0.01, (p, tree[p])
-        assert _rank_error(vals, flat[p], p) < 0.01, (p, flat[p])
 
 
 def test_exact_tails_and_nulls(spark):
@@ -68,3 +57,36 @@ def test_exact_tails_and_nulls(spark):
 
     empty = spark.createDataFrame([(None,)], "v double")
     assert tdigest_quantiles(empty, "v", probs=[0.5])[0.5] is None
+
+
+def test_nan_excluded(spark):
+    # percentile_approx sorts NaN above every number: unmasked, 300 NaN
+    # on 1,000 values would move the median to ~649 and p99 to NaN
+    rows = ([(float(i),) for i in range(1000)]
+            + [(float("nan"),)] * 300 + [(None,)] * 20)
+    df = spark.createDataFrame(rows, "v double").repartition(4)
+    q = tdigest_quantiles(df, "v", probs=[0.5, 0.99, 1.0])
+    assert abs(q[0.5] - 499.5) < 15
+    assert abs(q[0.99] - 989.0) < 15
+    assert q[1.0] == 999.0
+
+    only_nan = spark.createDataFrame([(float("nan"),)] * 3, "v double")
+    assert tdigest_quantiles(only_nan, "v", probs=[0.5])[0.5] is None
+
+
+@pytest.mark.parametrize("prob", [-0.5, 1.5])
+def test_prob_out_of_range_raises(spark, prob):
+    df = spark.createDataFrame([(1.0,), (2.0,)], "v double")
+    with pytest.raises(ValueError):
+        tdigest_quantiles(df, "v", probs=[0.5, prob])
+
+
+def test_no_python_worker(spark, skewed, monkeypatch):
+    def boom(*a, **k):
+        raise AssertionError("tdigest_quantiles started a Python worker")
+
+    # the classic session's frames subclass the public DataFrame
+    monkeypatch.setattr(type(skewed), "mapInPandas", boom)
+    monkeypatch.setattr(type(skewed.groupBy("v")), "applyInPandas", boom)
+    q = tdigest_quantiles(skewed, "v", probs=[0.5])
+    assert q[0.5] is not None

