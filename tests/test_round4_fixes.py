@@ -79,7 +79,7 @@ def _canon(row):
                  for v in row)
 
 
-def test_chunked_phase2_matches_fused(spark):
+def test_barrier_phase2_matches_fused(spark):
     """Barrier phase 2 on the flagship emits exactly the violation set
     of the fused barrier=False path — the shuffle between the phases
     must never change semantics."""
@@ -94,7 +94,7 @@ def test_chunked_phase2_matches_fused(spark):
     assert barrier == fused
 
 
-def test_chunking_emits_presence_violations_once(spark):
+def test_barrier_emits_presence_violations_once(spark):
     """Presence rules gate every main rule but their own violation
     rows appear exactly once under the barrier."""
     df = spark.createDataFrame(
@@ -110,7 +110,7 @@ def test_chunking_emits_presence_violations_once(spark):
     assert len(required_rows) == 1 and required_rows[0].id == 1
 
 
-def test_chunking_with_presence_schema_and_missing_columns(spark):
+def test_barrier_with_presence_schema_and_missing_columns(spark):
     """The full gating matrix under the barrier: presence rules gate
     the main and schema rules, and a rule naming an absent column
     emits per-row `required` — all identical to the fused path."""
@@ -140,7 +140,7 @@ def test_chunking_with_presence_schema_and_missing_columns(spark):
                if c[0] == 3 and "combo" in c) == 1
 
 
-def test_chunked_equivalence_property(spark):
+def test_barrier_equivalence_property(spark):
     """Property test: for RANDOM rule subsets, barrier phase 2 emits
     exactly the fused path's violations. Drawn with hypothesis over a
     fixed rule pool (presence + scalar + regex + schema +

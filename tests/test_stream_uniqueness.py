@@ -90,3 +90,27 @@ def test_null_ts_occurrence_counts_toward_duplicate(spark, tmpdir):
              for r in uniqueness_violations(
                  _mk(spark, b1), ["conv_id", "turn_idx"]).collect()]
     assert batch == got
+
+
+def test_state_partitions_follow_session_shuffle_partitions(spark, tmpdir):
+    """Every micro-batch of a new checkpoint runs one state task per
+    ``spark.sql.shuffle.partitions`` — the count ``get_spark`` ties to
+    the host's cores, so a stateful batch runs in one wave of tasks."""
+    src_dir = f"{tmpdir}/uq_parts_src"
+    for b in ([("a", 0, "2024-01-01T00:00:00")],
+              [("a", 0, "2024-01-01T00:01:00")]):
+        _mk(spark, b).coalesce(1).write.mode("append").parquet(src_dir)
+    stream = (spark.readStream.schema(_mk(spark, []).schema)
+              .option("maxFilesPerTrigger", 1).parquet(src_dir))
+    q = (stream_uniqueness_violations(
+            stream, ["conv_id", "turn_idx"], ts_col="ts", ttl="1 hour",
+            watermark="1 hour")
+         .writeStream.format("memory").queryName("uq_parts")
+         .option("checkpointLocation", f"{tmpdir}/uq_parts_ckpt")
+         .outputMode("append").trigger(availableNow=True).start())
+    q.awaitTermination(300)
+    want = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    progress = q.recentProgress
+    assert progress
+    assert [p["stateOperators"][0]["numShufflePartitions"]
+            for p in progress] == [want] * len(progress)

@@ -1,8 +1,22 @@
 """SparkSession factory with scale-aware defaults.
 
-Local sandbox runs on local[$SPARK_GRAFT_CPUS]; the same configuration
-block (AQE, skew join, Arrow) is what we'd ship to a 1000-executor
-cluster via spark-submit --py-files — only master/memory change.
+``get_spark()`` sizes the session from the host it runs on:
+
+- ``local[cpus]``, where ``cpus`` is the argument, else
+  ``$SPARK_GRAFT_CPUS``, else the CPUs this process may run on;
+- ``spark.sql.shuffle.partitions`` = ``cpus``. A stateful streaming
+  operator does not coalesce its partitions under AQE: every
+  micro-batch, the no-data batch that fires timeouts included, runs one
+  task per state partition, and each Python state task has a fixed
+  cost. One partition per core runs that batch in one wave of tasks.
+  A stateful query keeps the count its checkpoint was started with;
+- a quarter of physical memory (at least 1g) as driver memory.
+
+Explicit arguments win. Large batch jobs should pass
+``shuffle_partitions``: AQE coalesces small shuffles, but the count
+still sets the map side. The configuration block (AQE, skew join,
+Arrow) is the one to ship to a cluster via spark-submit --py-files —
+only master, partitions and memory change.
 """
 
 from __future__ import annotations
@@ -30,13 +44,24 @@ def checkpoint_partitioned(df):
         spark.conf.set("spark.sql.adaptive.enabled", prev)
 
 
+def _sizes(cpus, shuffle_partitions, driver_memory):
+    """(cpus, shuffle partitions, driver memory) for ``get_spark``:
+    explicit values win, then ``$SPARK_GRAFT_CPUS``, then the host."""
+    cpus = int(cpus or os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
+    if not driver_memory:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        driver_memory = f"{max(1, (phys // 4) >> 30)}g"
+    return cpus, int(shuffle_partitions or cpus), driver_memory
+
+
 def get_spark(app_name: str = "validify-spark",
               cpus: int | str | None = None,
               shuffle_partitions: int | None = None,
-              driver_memory: str = "48g",
+              driver_memory: str | None = None,
               extra_conf: dict | None = None) -> SparkSession:
-    cpus = int(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle_partitions = int(shuffle_partitions or max(cpus, 8))
+    cpus, shuffle_partitions, driver_memory = _sizes(
+        cpus, shuffle_partitions, driver_memory)
     b = (
         SparkSession.builder
         .master(f"local[{cpus}]")
