@@ -7,12 +7,19 @@ then converts + validates. Here the payload is a JSON-string column on
 an ingest DataFrame — the shape transcript events actually arrive in —
 and the whole flow stays declarative:
 
-1. ONE ``from_json`` with a corrupt-record column deserializes every
-   row in codegen (no Python). A payload that does not parse as an
-   object of the target schema (malformed JSON, or a JSON array /
-   scalar where serde would fail with "expected struct") becomes a
-   single ``code='payload'`` violation at location ``/`` — the analog
-   of ``validify_from`` returning the deserialization Err.
+1. ``from_json`` with a corrupt-record column deserializes every row
+   in the JVM (no Python). A payload that does not parse as an object
+   of the target schema (malformed JSON, or a JSON array / scalar
+   where serde would fail with "expected struct") becomes a single
+   ``code='payload'`` violation at location ``/`` — the analog of
+   ``validify_from`` returning the deserialization Err.
+   ``from_json`` is a ``CodegenFallback`` in Spark 4.1: an operator
+   that holds it runs interpreted, outside whole-stage codegen. The
+   expression is also parsed more than once per row: Catalyst
+   substitutes ``__payload`` into the engine's phase-1 filter (25
+   copies for a six-field, eight-rule ruleset), so a well-formed
+   payload is parsed there and again in the projection above it, and
+   the ``code='payload'`` branch scans and parses the source again.
 2. Rows that parsed are expanded to the schema's fields and run through
    the normal two-phase engine: missing / explicitly-null fields are
    NULL, so presence-stage ``required`` rules fire exactly like the
@@ -54,7 +61,6 @@ def validate_json_payload(
         ruleset: RuleSet,
         key_cols: Sequence[str],
         dedup: bool = False,
-        barrier: bool = True,
         strict_types: bool = False) -> Tuple[DataFrame, DataFrame]:
     """Deserialize ``json_col`` against ``schema`` and validate.
 
@@ -121,5 +127,5 @@ def validate_json_payload(
                     *[F.col("__payload").getField(f).alias(f)
                       for f in schema.fieldNames()]))
     eng = ValidationEngine(ruleset, key_cols=key_cols, dedup=dedup)
-    rule_viol = eng.violations(good, barrier=barrier)
+    rule_viol = eng.violations(good)
     return good, rule_viol.unionByName(bad_viol)
