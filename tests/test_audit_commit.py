@@ -249,10 +249,20 @@ def test_stale_file_in_escaped_empty_group_fails_batch(spark, turns,
 
 
 def test_commit_batch_runs_at_most_seven_spark_jobs(spark, turns,
-                                                    tmpdir):
+                                                    tmpdir, monkeypatch):
     """One batch = the violations write (phase-1 map stage + result
     stage), the n_rows group-by (2), the conversation write (2) and the
-    audit append (1). The count does not depend on the host's speed."""
+    audit append (1). The count does not depend on the host's speed.
+    No step starts a Python worker, and the audit append writes one
+    file."""
+    def boom(*a, **k):
+        raise AssertionError("the commit batch started a Python worker")
+
+    # the classic session's frames subclass the public DataFrame
+    monkeypatch.setattr(type(spark), "createDataFrame", boom)
+    monkeypatch.setattr(type(turns), "mapInPandas", boom)
+    monkeypatch.setattr(type(turns.groupBy("conv_id")), "applyInPandas",
+                        boom)
     run = _run(tmpdir, run_id="jobs")
     sc = spark.sparkContext
     group = "audit-commit-job-count"
@@ -263,3 +273,5 @@ def test_commit_batch_runs_at_most_seven_spark_jobs(spark, turns,
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 7
+    assert len([f for f in os.listdir(run.audit_path)
+                if f.startswith("part-")]) == 1

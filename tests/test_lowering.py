@@ -7,6 +7,7 @@ from collections import Counter
 
 import validify_spark as vs
 from validify_spark import compiler as C
+from validify_spark.data import generate_turns, standard_turns_ruleset
 from validify_spark.rules import Rule
 
 
@@ -75,3 +76,38 @@ def test_pass_verdicts_build_no_violation_structs(spark, monkeypatch):
     coverage = {r.rule_id: r.n_failed
                 for r in eng.coverage_report(df).collect()}
     assert coverage == dict(per_rule)
+
+
+def _plan_nodes(plan):
+    """(node name, node string) for every node of a JVM plan."""
+    out = [(plan.nodeName(), plan.simpleString(1 << 20))]
+    children = plan.children()
+    for i in range(children.size()):
+        out += _plan_nodes(children.apply(i))
+    return out
+
+
+def test_phase1_evaluates_each_modifier_once(spark):
+    """Phase 1 filters on its screen computed in a one-row Generate.
+    A Filter on the normalized frame itself is pushed below the
+    modifier projection with each modifier substituted into every rule
+    predicate on its column (5 trim(text) and 3 lower(role) for this
+    ruleset), and whole-stage codegen does no subexpression elimination
+    inside a Filter."""
+    turns = generate_turns(spark, 200, seed=7).localCheckpoint(eager=True)
+    eng = vs.ValidationEngine(standard_turns_ruleset(),
+                              key_cols=["conv_id", "turn_idx"])
+    for barrier in (True, False):
+        nodes = _plan_nodes(eng.violations(turns, barrier=barrier)
+                            ._jdf.queryExecution().optimizedPlan())
+        for name, s in nodes:
+            if name in ("Filter", "Generate"):
+                assert (s.count("trim("), s.count("lower(")) == (0, 0), \
+                    name
+        assert any(name == "Generate" and "explode(array(" in s
+                   for name, s in nodes)
+        projected = [s for name, s in nodes if name == "Project"
+                     and "trim(" in s]
+        assert len(projected) == 1
+        assert projected[0].count("trim(text") == 1
+        assert projected[0].count("lower(role") == 1

@@ -279,11 +279,16 @@ def test_decontaminate(spark):
     assert {r["doc_id"] for r in clean.collect()} == {2, 4}
 
 
-def test_ivf_ann_recall_and_exact_degenerate(spark):
+def test_ivf_ann_recall_and_exact_degenerate(spark, monkeypatch):
     import os
     from validify_spark.pipeline import cosine_topk, ivf_ann_topk
     sf = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
+
+    def boom(*a, **k):
+        raise AssertionError("the centroid frame started a Python worker")
+
+    monkeypatch.setattr(type(spark), "createDataFrame", boom)
     queries = (emb.filter("vec_id < 5")
                .selectExpr("vec_id AS query_id", "embedding"))
     exact = {(r["query_id"], r["vec_id"]) for r in

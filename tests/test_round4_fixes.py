@@ -57,10 +57,12 @@ def test_flagship_codegen_units_stay_compilable(spark):
 
 
 def test_trim_modifier_is_single_expression(spark):
-    """The trim modifier must stay ONE btrim expression — Catalyst
-    substitutes it into every predicate referencing the column, so an
-    expression-chain implementation multiplies into the scan stage
-    (this is what bloated phase 1 to 20k generated lines)."""
+    """The trim modifier must stay ONE btrim expression: an
+    expression-chain implementation multiplies into the generated code
+    of whatever operator evaluates it. It once bloated phase 1 to 20k
+    generated lines, when Catalyst still substituted the modifier into
+    every phase-1 predicate on its column; phase 1 now evaluates each
+    modifier once (test_lowering.test_phase1_evaluates_each_modifier_once)."""
     from validify_spark.modifiers import _WS_CHARS, _trim_unicode
     expr = str(_trim_unicode(F.col("c"))._jc)
     assert "btrim" in expr

@@ -32,6 +32,7 @@ from pyspark.sql import (Column, DataFrame, Observation, SparkSession,
 from pyspark.sql.window import Window
 
 from ..engine import ValidationEngine
+from ..session import literal_frame
 
 AUDIT_SCHEMA = ("run_id string, partition_id string, n_rows long, "
                 "n_failed_rows long, n_violations long, passed boolean, "
@@ -256,6 +257,12 @@ class AuditedValidationRun:
         directory as it was; a data file there would contradict a
         ``passed=true`` marker that resume never revisits, so a
         job-free listing fails the batch instead.
+
+        The audit rows are one JSON literal parsed in the JVM
+        (``session.literal_frame``) and append as one file; no step of
+        the batch starts a Python worker. ``createDataFrame`` of the
+        rows as a Python list ran one Python task per core and wrote
+        as many files.
         """
         spark = df.sparkSession
         started = dt.datetime.now(dt.timezone.utc)
@@ -327,10 +334,8 @@ class AuditedValidationRun:
             "n_conv_violations": n_conv[p],
         } for p in pids]
         from .sources import write_table
-        adf = spark.createDataFrame(
-            [tuple(p.values()) for p in payloads], AUDIT_SCHEMA)
-        write_table(adf, self.audit_table or self.audit_path,
-                    mode="append")
+        write_table(literal_frame(spark, payloads, AUDIT_SCHEMA),
+                    self.audit_table or self.audit_path, mode="append")
         for p in payloads:
             _atomic_write_json(
                 f"{self._marker_dir}/{p['partition_id']}.json", p)

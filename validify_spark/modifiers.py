@@ -26,9 +26,10 @@ def _trim_unicode(c: Column) -> Column:
     """Exact-parity Unicode trim: one `btrim` over the 25-char
     White_Space set (verified char-for-char equal to Python
     str.strip(WS) incl. multi-byte \\u3000/\\u2028 and NOT trimming
-    ZWSP). ONE expression matters as much as runtime here: Catalyst
-    substitutes the modifier into every rule predicate referencing the
-    column (~18 copies in the 8-rule flagship's phase-1 filter), so a
+    ZWSP). ONE expression matters as much as runtime here: when
+    Catalyst still substituted the modifier into every rule predicate
+    referencing the column (~18 copies in the 8-rule flagship's
+    phase-1 filter, before the engine filtered above a Generate), a
     25-char startswith/endswith probe chain — the previous
     implementation — ballooned the scan stage past Janino's 64 KB
     method limit (20k-line processNext, failed compile → interpreted

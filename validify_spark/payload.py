@@ -15,11 +15,14 @@ and the whole flow stays declarative:
    ``validify_from`` returning the deserialization Err.
    ``from_json`` is a ``CodegenFallback`` in Spark 4.1: an operator
    that holds it runs interpreted, outside whole-stage codegen. The
-   expression is also parsed more than once per row: Catalyst
-   substitutes ``__payload`` into the engine's phase-1 filter (25
-   copies for a six-field, eight-rule ruleset), so a well-formed
-   payload is parsed there and again in the projection above it, and
-   the ``code='payload'`` branch scans and parses the source again.
+   engine's phase 1 holds no copy of it (its screen is filtered above
+   a ``Generate``, see ``engine``), but Catalyst still substitutes
+   ``__payload`` into the two filters that split parsed from corrupt
+   rows: a well-formed payload is parsed in its branch's filter and
+   again in the projection that expands its fields, and the
+   ``code='payload'`` branch scans the source a second time and parses
+   every payload once more (3 ``from_json`` in the optimized plan for
+   a six-field, eight-rule ruleset).
 2. Rows that parsed are expanded to the schema's fields and run through
    the normal two-phase engine: missing / explicitly-null fields are
    NULL, so presence-stage ``required`` rules fire exactly like the

@@ -19,6 +19,8 @@ from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..session import literal_frame
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -341,9 +343,9 @@ def ivf_ann_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
         .fit(train.select("__feat"))
     assigned = model.transform(base).select(id_col, vec_col, "__cell")
 
-    cents = spark.createDataFrame(
-        [(i, [float(x) for x in c])
-         for i, c in enumerate(model.clusterCenters())],
+    cents = literal_frame(
+        spark, [{"__cell": i, "__cent": [float(x) for x in c]}
+                for i, c in enumerate(model.clusterCenters())],
         "__cell int, __cent array<double>")
     qbase = (queries
              .select(query_id_col, F.col(vec_col).alias("__qvec"))

@@ -21,9 +21,10 @@ only master, partitions and memory change.
 
 from __future__ import annotations
 
+import json
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import SparkSession, functions as F
 
 
 def checkpoint_partitioned(df):
@@ -42,6 +43,17 @@ def checkpoint_partitioned(df):
         return df.localCheckpoint(eager=True)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev)
+
+
+def literal_frame(spark, rows: list, schema: str):
+    """A small DataFrame of ``rows`` (dicts keyed by the field names of
+    the DDL ``schema``), built in the JVM: one JSON literal parsed with
+    ``from_json`` and ``inline``d over a one-partition range. Unlike
+    ``createDataFrame`` of a Python list, it starts no Python worker
+    and does not depend on the Arrow conf, and a write of it makes one
+    file. JSON round-trips Python ints, floats and strings exactly."""
+    return spark.range(1, numPartitions=1).select(F.inline(F.from_json(
+        F.lit(json.dumps(rows)), f"array<struct<{schema}>>")))
 
 
 def _sizes(cpus, shuffle_partitions, driver_memory):
