@@ -167,24 +167,27 @@ def test_fuzz_transcript_diff_vs_duckdb(spark, seed):
 
 @pytest.mark.parametrize("seed", range(10))
 def test_fuzz_cdf_drift_vs_duckdb(spark, seed):
-    """Random two-sample shapes (mixtures, heavy ties, NULL/NaN
-    pollution, unequal sizes) — the fused KS+W1 pass must match the
-    DuckDB window-CDF oracle exactly on both statistics."""
+    """Random two-sample shapes (mixtures, heavy ties, signed zeros,
+    NULL/NaN pollution, unequal sizes) — cdf_drift's KS, W1 and CvM
+    must each match the DuckDB window-CDF oracle exactly."""
     import numpy as np
     from validify_spark.checks import cdf_drift
 
     rng = np.random.default_rng(4000 + seed)
     def sample(n):
-        kind = rng.integers(0, 4)
+        kind = rng.integers(0, 5)
         if kind == 0:
             v = rng.normal(rng.uniform(-2, 2), rng.uniform(0.5, 3), n)
         elif kind == 1:
             v = rng.exponential(rng.uniform(0.5, 5), n)
         elif kind == 2:   # heavy ties: few distinct values
             v = rng.choice(rng.normal(0, 10, 7), n)
-        else:             # mixture with a point mass
+        elif kind == 3:   # mixture with a point mass
             v = np.where(rng.random(n) < 0.4, 3.25,
                          rng.uniform(-5, 5, n))
+        else:             # -0.0 mixed with 0.0: one tie group, so the
+            # whole side falls in one bucket
+            v = rng.choice([-0.0, 0.0], n)
         return np.round(v, 2)
 
     a = sample(int(rng.integers(50, 3000)))

@@ -93,13 +93,23 @@ def test_phase1_evaluates_each_modifier_once(spark):
     modifier projection with each modifier substituted into every rule
     predicate on its column (5 trim(text) and 3 lower(role) for this
     ruleset), and whole-stage codegen does no subexpression elimination
-    inside a Filter."""
+    inside a Filter. The last input runs with InferFiltersFromGenerate
+    enabled, as in a session not built by get_spark: a plain explode of
+    phase 2's array would gain a size(_v) > 0 filter below the anchor
+    with the whole violations array substituted in."""
     turns = generate_turns(spark, 200, seed=7).localCheckpoint(eager=True)
     eng = vs.ValidationEngine(standard_turns_ruleset(),
                               key_cols=["conv_id", "turn_idx"])
-    for barrier in (True, False):
-        nodes = _plan_nodes(eng.violations(turns, barrier=barrier)
-                            ._jdf.queryExecution().optimizedPlan())
+    conf = "spark.sql.optimizer.excludedRules"
+    old = spark.conf.get(conf)
+    for barrier, excluded in ((True, old), (False, old), (True, ""),
+                              (False, "")):
+        spark.conf.set(conf, excluded)
+        try:
+            nodes = _plan_nodes(eng.violations(turns, barrier=barrier)
+                                ._jdf.queryExecution().optimizedPlan())
+        finally:
+            spark.conf.set(conf, old)
         for name, s in nodes:
             if name in ("Filter", "Generate"):
                 assert (s.count("trim("), s.count("lower(")) == (0, 0), \

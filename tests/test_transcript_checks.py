@@ -181,7 +181,8 @@ def test_ks_statistic_identical_is_zero(spark):
 
 def test_ks_ties_across_batches(spark):
     # heavy ties: value 5.0 repeated 2000x on one side only — the
-    # CDF must be read AFTER the whole tie group, not mid-group
+    # CDF must be read AFTER the whole tie group, not mid-group; the
+    # group is one (b, v) count row, so its CDF is read once
     import numpy as np
     a = np.concatenate([np.full(2000, 5.0), np.arange(100)])
     b = np.arange(100).astype(float)
@@ -267,8 +268,10 @@ def test_wasserstein_vs_duckdb_random(spark):
 
 
 def test_wasserstein_chunk_seams(spark):
-    """Tiny Arrow batches split buckets and tie groups across chunk
-    seams — the carried (prev_v, prev_d) must stitch them exactly."""
+    """Heavy ties over several buckets, with a tiny Arrow batch size
+    set (the statistics run no Arrow pass, so it must change nothing):
+    each bucket's last width reaches the next bucket's minimum, and
+    the sum over buckets must equal the global window oracle."""
     import numpy as np
     a = np.repeat(np.arange(50, dtype=float), 20)   # heavy ties
     b = np.repeat(np.arange(25, 75, dtype=float), 8)
@@ -325,3 +328,22 @@ def test_wasserstein_identical_zero_and_empty_raises(spark):
     assert row["w1"] == 0.0
     with pytest.raises(ValueError, match="no non-null"):
         wasserstein_distance(df, "v", df.filter("v < 0"), "v")
+
+
+def test_cdf_drift_runs_no_python(spark, monkeypatch):
+    """The CDF family is one SQL window query: no pandas pass, and no
+    Python or Arrow operator in the executed plan."""
+    from validify_spark.checks import cdf_drift
+    a = spark.range(500).selectExpr("CAST(id % 23 AS DOUBLE) AS v")
+    b = spark.range(400).selectExpr("CAST(id % 29 AS DOUBLE) AS v")
+
+    def boom(*args, **kwargs):
+        raise AssertionError("cdf_drift started a Python worker")
+
+    monkeypatch.setattr(type(a), "mapInPandas", boom)
+    monkeypatch.setattr(type(a.groupBy("v")), "applyInPandas", boom)
+    out = cdf_drift(a, "v", b, "v", num_partitions=4)
+    row = out.collect()[0]
+    assert row["d"] > 0 and (row["n_left"], row["n_right"]) == (500, 400)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert not any(w in plan for w in ("Python", "Arrow", "Pandas")), plan

@@ -15,8 +15,8 @@ from .ordering import ordering_violations
 from .conversation import conversation_shape_violations
 from .convrules import conversation_rules
 from .diffcheck import transcript_diff
-from .ks import cdf_drift, cvm_statistic, ks_statistic
-from .wasserstein import wasserstein_distance
+from .cdf import (cdf_drift, cvm_statistic, ks_statistic,
+                  wasserstein_distance)
 from .skew import (heavy_hitters, heavy_hitters_sketch,
                    salted_agg, salted_collect_list, with_salt)
 

@@ -107,7 +107,12 @@ def heavy_hitters_sketch(df: DataFrame, cols: Sequence[str],
     Returns top-``k`` rows (cols..., n_rows_min) by the merged lower
     bound, ties broken by key ascending. With capacity >= the true
     distinct count the result is exact (pytest-verified against
-    heavy_hitters)."""
+    heavy_hitters).
+
+    Why a Python pass here: exact :func:`heavy_hitters` shuffles every
+    distinct key, while this pass shuffles at most ``capacity`` keys
+    per partition. Spark's only built-in alternative,
+    ``DataFrame.freqItems``, returns candidates without counts."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T

@@ -226,17 +226,20 @@ class ValidationEngine:
             *carry, self._violations_array(presence, mains).alias("_v"))
         if observe_rows is not None:
             per_row = observe_rows(per_row, F.size("_v") > 0)
-        # NO size(_v)>0 pre-filter here: explode() already emits
-        # zero rows for an empty array, and a filter on _v gets
-        # pushed by Catalyst below the barrier exchange — which
-        # substitutes the ENTIRE violations expression (with
-        # modifier chains inlined per rule, since normalize hasn't
-        # materialized yet on that side) into the full-scan stage.
-        # That duplication is what overflowed Janino's 64 KB method
-        # limit on the 8-rule flagship (17k-line processNext, 3x
-        # failed compiles + interpreted fallback per fresh JVM).
+        # NO size(_v)>0 filter on _v, written or inferred: Catalyst
+        # pushes a filter on _v below the barrier exchange and the
+        # phase-1 anchor, substituting the ENTIRE violations
+        # expression (modifier chains inlined per rule) into the
+        # full-scan stage, where it once overflowed Janino's 64 KB
+        # method limit on the 8-rule flagship. A plain explode() gets
+        # that filter from InferFiltersFromGenerate in any session
+        # that does not exclude the rule (get_spark does); the rule
+        # skips outer generators, so the generator is explode_outer,
+        # and the NULL row it emits for an empty array is dropped by a
+        # filter on the generated column, which stays above it.
         out = (per_row
-               .select(*carry, F.explode("_v").alias("v"))
+               .select(*carry, F.explode_outer("_v").alias("v"))
+               .filter(F.col("v").isNotNull())
                .select(*carry, "v.*"))
         if self.dedup:
             # ValidationErrors::merge dedup semantics (error.rs:222-231)

@@ -210,7 +210,7 @@ def numeric_drift_baseline(batch_df: DataFrame, column: str,
 
 def _numeric_bucket(col: Column, cuts: Sequence[float]) -> Column:
     """Deterministic bucket id for a numeric value given sorted cut
-    points — same pure-function-of-the-value scheme as checks/_cdf.py
+    points — same pure-function-of-the-value scheme as checks/cdf.py
     (never a re-sampled range partitioner). NULL/NaN stay NULL so the
     downstream consumer's own null handling applies: stream_drift's
     isNull() branch routes them to its null_bucket (pre-mapping to a
