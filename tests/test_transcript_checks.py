@@ -182,7 +182,8 @@ def test_ks_statistic_identical_is_zero(spark):
 def test_ks_ties_across_batches(spark):
     # heavy ties: value 5.0 repeated 2000x on one side only — the
     # CDF must be read AFTER the whole tie group, not mid-group; the
-    # group is one (b, v) count row, so its CDF is read once
+    # window's RANGE frame spans the group, so all its rows read the
+    # same CDF
     import numpy as np
     a = np.concatenate([np.full(2000, 5.0), np.arange(100)])
     b = np.arange(100).astype(float)
