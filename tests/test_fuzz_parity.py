@@ -2,8 +2,7 @@
 
 The 50 driver-checked queries each exercise one operator shape; the
 compiler's remaining risk is COMBINATORIAL — gates x presence gating x
-modifiers on the same column x the phase barrier x iter nesting
-interacting.
+modifiers on the same column x iter nesting interacting.
 Each fuzz trial uses a seeded RNG to generate a random valid RuleSet
 (modifier chains, presence rules, gated main rules, ghost columns,
 iter-nested inners) over a real sf0.001 table, then lowers the SAME
@@ -13,9 +12,8 @@ ruleset two independent ways:
   2. a mechanical translation to ANSI SQL run on DuckDB
 
 and asserts multiset equality of (key, location, code) violation rows.
-Every trial also asserts the full-row barrier (barrier=True) == fused
-(barrier=False) identity, extending test_round4_fixes' fixed-ruleset
-version to generated rulesets. Mirrors the combinatorial breadth of
+Every trial also asserts that the rows ``with_valid_flag`` marks
+invalid are exactly the rows with violations. Mirrors the combinatorial breadth of
 the reference's derive_tests/ (30 files of attribute mixes, e.g.
 complex.rs, validify.rs:422-559).
 
@@ -639,24 +637,15 @@ def _run_trial(spark, con, sources, seed):
     key = spec["key"]
 
     eng = vs.ValidationEngine(ruleset, key_cols=[key])
-    barrier = eng.violations(sources[table], barrier=True)
     full_cols = [key, "rule_id", "location", "code",
                  F.to_json("params").alias("p")]
-    barrier_rows = sorted(
+    rows = sorted(
         tuple(str(x) for x in r)
-        for r in barrier.select(*full_cols).collect())
-
-    # 1. barrier == fused, full rows
-    fused_rows = sorted(
-        tuple(str(x) for x in r)
-        for r in eng.violations(sources[table], barrier=False)
+        for r in eng.violations(sources[table])
                     .select(*full_cols).collect())
-    assert barrier_rows == fused_rows, (
-        f"seed={seed}: barrier != fused "
-        f"({len(barrier_rows)} vs {len(fused_rows)} rows)")
 
-    # 2. engine == DuckDB oracle on (key, location, code)
-    got = sorted((int(r[0]), r[2], r[3]) for r in barrier_rows)
+    # 1. engine == DuckDB oracle on (key, location, code)
+    got = sorted((int(r[0]), r[2], r[3]) for r in rows)
     sql = build_oracle_sql(table, spec, ruleset, chains)
     exp = sorted((int(k), loc, code)
                  for k, loc, code in con.sql(sql).fetchall())
@@ -668,7 +657,7 @@ def _run_trial(spark, con, sources, seed):
         f"{[(r.kind, r.column, r.stage, r.params.get('_gate')) for r in ruleset.rules]}"
         f"\nchains: {chains}\nSQL:\n{sql}")
 
-    # 3. the two phases agree: the rows with_valid_flag marks invalid
+    # 2. the two phases agree: the rows with_valid_flag marks invalid
     # are exactly the rows with violations (keys are primary keys)
     invalid = sorted(
         int(r[0]) for r in eng.with_valid_flag(sources[table], "__ok")
@@ -682,7 +671,7 @@ def _run_trial(spark, con, sources, seed):
 @pytest.mark.parametrize("block", range(8))
 def test_fuzz_ruleset_parity(spark, sources, block):
     """≥200 generated rulesets (8 blocks x 25), each checked engine-vs-
-    DuckDB and barrier-vs-fused. Blocks keep pytest granularity sane
+    DuckDB and violations-vs-with_valid_flag. Blocks keep pytest granularity sane
     while one seed failure pins the exact reproducer."""
     con = duckdb.connect()
     seeds = _seeds()

@@ -95,24 +95,3 @@ def test_range_rule_matches_python(prop_engine, values, mn, mx):
     got = prop_engine(values, range_("v", min=mn, max=mx), ddl="v double")
     want = [v is None or (mn <= v <= mx) for v in values]
     assert got == want
-
-
-def test_barrier_and_fused_paths_identical(spark):
-    # the phase barrier (JIT-stability shuffle between phase-1 filter
-    # and phase-2 violation construction) must not change results
-    from validify_spark.data import generate_turns, standard_turns_ruleset
-    from validify_spark.engine import ValidationEngine
-    import datetime as dt
-
-    turns = generate_turns(spark, 2000, seed=7).persist()
-    turns.count()  # barrier vs the generator expression (see above)
-    eng = ValidationEngine(standard_turns_ruleset(),
-                           key_cols=["conv_id", "turn_idx"],
-                           run_ts=dt.datetime(2026, 1, 1))
-    with_b = eng.violations(turns, barrier=True)
-    without_b = eng.violations(turns, barrier=False)
-    cols = ["conv_id", "turn_idx", "location", "code"]
-    assert with_b.select(cols).exceptAll(without_b.select(cols)).isEmpty()
-    assert without_b.select(cols).exceptAll(with_b.select(cols)).isEmpty()
-    assert with_b.count() == without_b.count() > 0
-    turns.unpersist()

@@ -102,11 +102,10 @@ def test_phase1_evaluates_each_modifier_once(spark):
                               key_cols=["conv_id", "turn_idx"])
     conf = "spark.sql.optimizer.excludedRules"
     old = spark.conf.get(conf)
-    for barrier, excluded in ((True, old), (False, old), (True, ""),
-                              (False, "")):
+    for excluded in (old, ""):
         spark.conf.set(conf, excluded)
         try:
-            nodes = _plan_nodes(eng.violations(turns, barrier=barrier)
+            nodes = _plan_nodes(eng.violations(turns)
                                 ._jdf.queryExecution().optimizedPlan())
         finally:
             spark.conf.set(conf, old)

@@ -1,7 +1,6 @@
 """Round-4 regression tests: Janino codegen-overflow fix (the r3
-headline defect), barrier phase-2 equivalence with the fused path,
-storage-backed duplicate_clusters, and the merged driver-window
-queries."""
+headline defect), presence gating of phase 2, storage-backed
+duplicate_clusters, and the merged driver-window queries."""
 
 import glob
 import os
@@ -33,7 +32,7 @@ def _codegen_units(df):
 def test_flagship_codegen_units_stay_compilable(spark):
     """r3's scale killer: the 8-rule flagship generated a 17k-line
     processNext() (modifier trim-chains substituted into every rule
-    predicate + the size(_v)>0 filter pushed below the barrier) that
+    predicate + the size(_v)>0 filter pushed into phase 1) that
     overflowed Janino's 64 KB method limit — 3 failed multi-second
     compiles per fresh JVM, then interpreted eval. Guard the fix with
     a hard size bound: the observed compile limit was ~14k lines, the
@@ -81,24 +80,9 @@ def _canon(row):
                  for v in row)
 
 
-def test_barrier_phase2_matches_fused(spark):
-    """Barrier phase 2 on the flagship emits exactly the violation set
-    of the fused barrier=False path — the shuffle between the phases
-    must never change semantics."""
-    E._load(spark, "/root/testdata/sf0.001", "lineitem")
-    turns = spark.sql(E.DERIVE_TURNS_SQL).localCheckpoint(eager=True)
-    eng = vs.ValidationEngine(E._turns_ruleset(),
-                              key_cols=["conv_id", "turn_idx"],
-                              run_ts=E._RUN_TS)
-    barrier = {_canon(r) for r in eng.violations(turns).collect()}
-    fused = {_canon(r) for r in
-             eng.violations(turns, barrier=False).collect()}
-    assert barrier == fused
-
-
-def test_barrier_emits_presence_violations_once(spark):
+def test_emits_presence_violations_once(spark):
     """Presence rules gate every main rule but their own violation
-    rows appear exactly once under the barrier."""
+    rows appear exactly once."""
     df = spark.createDataFrame(
         [(1, None, "x"), (2, "ok", None), (3, "ok", "y")],
         "id int, a string, b string")
@@ -112,10 +96,10 @@ def test_barrier_emits_presence_violations_once(spark):
     assert len(required_rows) == 1 and required_rows[0].id == 1
 
 
-def test_barrier_with_presence_schema_and_missing_columns(spark):
-    """The full gating matrix under the barrier: presence rules gate
-    the main and schema rules, and a rule naming an absent column
-    emits per-row `required` — all identical to the fused path."""
+def test_with_presence_schema_and_missing_columns(spark):
+    """The full gating matrix: presence rules gate the main and schema
+    rules, and a rule naming an absent column emits per-row
+    `required`."""
     df = spark.createDataFrame(
         [(1, "p", "abc", 5), (2, None, "abc", 5), (3, "p", "x", 50)],
         "id int, pay string, s string, n int")
@@ -129,55 +113,14 @@ def test_barrier_with_presence_schema_and_missing_columns(spark):
         vs.length("ghost", min=1),  # absent column -> required
     ]
     eng = vs.ValidationEngine(vs.RuleSet(rules=rules), key_cols=["id"])
-    barrier = {_canon(r) for r in eng.violations(df).collect()}
-    fused = {_canon(r) for r in
-             eng.violations(df, barrier=False).collect()}
-    assert barrier == fused
+    got = {_canon(r) for r in eng.violations(df).collect()}
     # presence-failing row 2 must carry ONLY its presence violation
     # (presence failure suppresses later-stage rules for the row)
-    row2 = [c for c in barrier if c[0] == 2]
+    row2 = [c for c in got if c[0] == 2]
     assert len(row2) == 1
     # id 3: schema rule fired exactly once
-    assert sum(1 for c in barrier
+    assert sum(1 for c in got
                if c[0] == 3 and "combo" in c) == 1
-
-
-def test_barrier_equivalence_property(spark):
-    """Property test: for RANDOM rule subsets, barrier phase 2 emits
-    exactly the fused path's violations. Drawn with hypothesis over a
-    fixed rule pool (presence + scalar + regex + schema +
-    missing-column)."""
-    from hypothesis import given, settings, strategies as st
-
-    pool = [
-        vs.required("pay", stage="presence"),
-        vs.length("s", min=2, max=8),
-        vs.range_("n", min=0, max=10),
-        vs.regex("s", "a"),
-        vs.contains("s", "b"),
-        vs.not_in("s", ["zz"]),
-        vs.schema_rule("NOT (n > 40)", code="big_n"),
-        vs.length("ghost", min=1),
-    ]
-    df = spark.createDataFrame(
-        [(1, "p", "abc", 5), (2, None, "ab", 50), (3, "p", "zz", -1),
-         (4, "p", None, None), (5, None, None, 3)],
-        "id int, pay string, s string, n int").localCheckpoint()
-
-    @settings(max_examples=6, deadline=None)
-    @given(mask=st.lists(st.booleans(), min_size=8, max_size=8))
-    def prop(mask):
-        rules = [r for r, keep in zip(pool, mask) if keep]
-        if not rules:
-            return
-        eng = vs.ValidationEngine(vs.RuleSet(rules=list(rules)),
-                                  key_cols=["id"])
-        barrier = {_canon(r) for r in eng.violations(df).collect()}
-        fused = {_canon(r) for r in
-                 eng.violations(df, barrier=False).collect()}
-        assert barrier == fused, mask
-
-    prop()
 
 
 def test_duplicate_clusters_checkpoint_dir(spark, tmp_path):

@@ -12,9 +12,8 @@ filter below the modifier projection, substituting each modifier into
 every rule predicate on its column, and whole-stage codegen does no
 subexpression elimination inside a ``Filter``. So each modifier runs
 once per row, in the projection below the ``Generate``.
-A batch frame shuffles the captured rows on the key columns between
-the phases (the phase barrier, see ``_violations``); a streaming
-micro-batch runs phase 1, phase 2 and the explode in one stage.
+Phase 1, phase 2 and the explode run in one stage, on a batch frame
+and on a streaming micro-batch alike.
 Catalyst CSE folds repeated subexpressions within a projection (e.g.
 five rules on the same column) and whole-stage codegen inlines the
 predicates — the distributed analog of the reference's monomorphized
@@ -139,20 +138,16 @@ class ValidationEngine:
 
     def violations(self, df: DataFrame,
                    pre_normalized: bool = False,
-                   extra_cols: Sequence[str] = (),
-                   barrier: bool = True) -> DataFrame:
+                   extra_cols: Sequence[str] = ()) -> DataFrame:
         """The violations table of ``df``: key columns, ``extra_cols``
         and one row per violation (module docstring for the schema).
+        A batch or streaming ``df`` runs both phases in one stage.
 
-        ``pre_normalized``: ``df`` already went through ``normalize``.
-        ``barrier``: shuffle the phase-1 captures on the key columns
-        before phase 2. It applies to batch frames only; a streaming
-        ``df`` always runs both phases in one stage. The result is the
-        same either way."""
-        return self._violations(df, pre_normalized, extra_cols, barrier)
+        ``pre_normalized``: ``df`` already went through ``normalize``."""
+        return self._violations(df, pre_normalized, extra_cols)
 
     def _violations(self, df: DataFrame, pre_normalized: bool,
-                    extra_cols: Sequence[str], barrier: bool,
+                    extra_cols: Sequence[str],
                     observe_rows=None) -> DataFrame:
         """``violations()`` with an optional per-row hook:
         ``observe_rows(rows, failed)`` may wrap (e.g. ``observe``) the
@@ -164,33 +159,6 @@ class ValidationEngine:
         carry = list(self.key_cols) + list(extra_cols)
         # two-phase: cheap boolean scan over everything, expensive
         # violation-struct construction only on the failing minority.
-        # On a batch frame ``barrier`` inserts a shuffle between the
-        # phases so they land in SEPARATE whole-stage-codegen units.
-        # Without it they fuse into one giant processNext(): C2 takes
-        # minutes to compile it and recurring deopts in the
-        # rarely-taken phase-2 branches throw the ENTIRE hot scan loop
-        # back to C1/interpreter — measured 10x throughput swings
-        # between identical passes (70k vs 800k turns/s). With the
-        # barrier the full-scan stage is a compact conjunction that
-        # JITs in seconds and stays compiled; the shuffle moves only
-        # failing rows (violation minority), which is also the natural
-        # partitioning for writing the violations table.
-        # A streaming frame skips the barrier and runs each micro-batch
-        # in one stage. What the gain needs is that the shuffle's fixed
-        # cost per micro-batch (a map stage of its own before the
-        # phase-2 stage) outweighs anything the split buys; it is
-        # largest on short micro-batches. On stream_ingest's payload
-        # query (250 events per batch, 4 cores, warm) the map stage
-        # took 14-27 ms and addBatch fell from 306-372 to 189-255 ms
-        # fused. Long micro-batches and rulesets with no Python UDF to
-        # split codegen were not slower fused either (warm medians,
-        # fused against barrier; 4 cores, 5 alternating process pairs
-        # each, 0 "Failed to compile"):
-        # standard turns ruleset over a 2M-turn backlog in one batch,
-        # 7.5 s against 7.8 s; the same files one per batch (16 batches
-        # per run, 48 per JVM), 2.4 s against 2.5 s per 250k-turn
-        # batch; 100k JSON events in one batch, 0.42 against 0.49 s
-        # without UDF rules and 0.97 against 1.06 s with them.
         presence, mains = self._lower(src)
         # the anchor: the screen is computed in a one-row Generate and
         # filtered on above it. A Filter on ``src`` directly is pushed
@@ -207,13 +175,6 @@ class ValidationEngine:
                        ~self._pass_all(presence, mains, "screen")))
                        .alias(_SCREEN))
                    .filter(_SCREEN))
-        if barrier and not df.isStreaming:
-            if self.key_cols:
-                failing = failing.repartition(
-                    *[F.col(k) for k in self.key_cols])
-            else:
-                failing = failing.repartition(
-                    df.sparkSession.sparkContext.defaultParallelism)
 
         # phase 2 is ONE projection over the captured rows, reusing
         # phase 1's lowering: ``failing`` keeps ``src``'s attributes, so
@@ -227,16 +188,16 @@ class ValidationEngine:
         if observe_rows is not None:
             per_row = observe_rows(per_row, F.size("_v") > 0)
         # NO size(_v)>0 filter on _v, written or inferred: Catalyst
-        # pushes a filter on _v below the barrier exchange and the
-        # phase-1 anchor, substituting the ENTIRE violations
-        # expression (modifier chains inlined per rule) into the
-        # full-scan stage, where it once overflowed Janino's 64 KB
-        # method limit on the 8-rule flagship. A plain explode() gets
-        # that filter from InferFiltersFromGenerate in any session
-        # that does not exclude the rule (get_spark does); the rule
-        # skips outer generators, so the generator is explode_outer,
-        # and the NULL row it emits for an empty array is dropped by a
-        # filter on the generated column, which stays above it.
+        # pushes a filter on _v below the phase-1 anchor, substituting
+        # the ENTIRE violations expression (modifier chains inlined per
+        # rule) into the phase-1 filter, where it once overflowed
+        # Janino's 64 KB method limit on the 8-rule flagship. A plain
+        # explode() gets that filter from InferFiltersFromGenerate in
+        # any session that does not exclude the rule (get_spark does);
+        # the rule skips outer generators, so the generator is
+        # explode_outer, and the NULL row it emits for an empty array
+        # is dropped by a filter on the generated column, which stays
+        # above it.
         out = (per_row
                .select(*carry, F.explode_outer("_v").alias("v"))
                .filter(F.col("v").isNotNull())

@@ -216,9 +216,11 @@ class AuditedValidationRun:
         payloads written this call.
 
         Work is per commit batch of groups, never per group: whatever
-        its size, a batch runs at most 7 Spark jobs — two writes and
-        the ``n_rows`` group-by, each a shuffle (a map-stage job and a
-        result job under AQE), and the audit append.
+        its size, a batch runs at most 6 Spark jobs: the violations
+        write (one job, both engine phases in its result stage), the
+        ``n_rows`` group-by and the conversation-violations write (each
+        a shuffle: a map-stage job and a result job under AQE), and
+        the audit append.
         ``chunk_size`` bounds the groups per batch:
         finer-grained restart for more scans. Each group adds one
         conditional count per observed write, so batches of thousands
@@ -245,13 +247,14 @@ class AuditedValidationRun:
         Each marker count comes from the write that commits it, by an
         Observation in that write's result stage, whose task updates
         Spark applies once: ``n_failed_rows`` over the phase-2 rows
-        (one per phase-1 capture; with ``engine.dedup`` this is the map
-        stage before the dedup exchange), ``n_violations`` and
+        (one per phase-1 capture; both engine phases run in the
+        violations write's one stage, and with ``engine.dedup`` in the
+        map stage before the dedup exchange), ``n_violations`` and
         ``n_conv_violations`` over the committed rows. ``n_rows`` is an
         exact group-by that reads only ``__pid``'s inputs, not an
-        Observation on the phase-1 scan: that is a map stage, which
-        Spark may re-run and count twice, and AQE drops an Observation
-        above an exchange it has proven empty.
+        Observation on the phase-1 scan: with ``engine.dedup`` that is
+        a map stage, which Spark may re-run and count twice, and AQE
+        drops an Observation above an exchange it has proven empty.
 
         A group counted 0 wrote nothing, so dynamic overwrite left its
         directory as it was; a data file there would contradict a
@@ -285,16 +288,14 @@ class AuditedValidationRun:
                   # partition id is a pure function of conv_id, so it
                   # is recomputable from the group output itself
                   .withColumn("partition_id", self._partition_col()))
-            # shares no stage with the violations write: alongside it,
-            # its scan fills the cores that write's small phase-2 stage
-            # leaves idle
+            # shares no stage with the violations write, so the two
+            # run side by side and fill the cores the other leaves idle
             conv = _in_background(spark, self._commit, cv, pids,
                                   self.conv_violations_dir)
         try:
             failed_obs = Observation()
             viols = self.engine._violations(
                 src, pre_normalized=True, extra_cols=["__pid"],
-                barrier=True,
                 observe_rows=lambda rows, failed: rows.observe(
                     failed_obs, *_group_counts(
                         F.when(failed, F.col("__pid")), pids)))

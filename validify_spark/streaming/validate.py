@@ -23,8 +23,8 @@ def stream_violations(engine: ValidationEngine,
                       stream_df: DataFrame) -> DataFrame:
     """Violations as a streaming DataFrame (append-mode friendly:
     stateless projection + filter + explode, no aggregation state).
-    A micro-batch runs phase 1, phase 2 and the explode in one stage:
-    the engine's phase barrier applies to batch frames only."""
+    A micro-batch runs phase 1, phase 2 and the explode in one stage,
+    the same plan as a batch frame."""
     return engine.violations(stream_df)
 
 
